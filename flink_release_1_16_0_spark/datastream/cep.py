@@ -6,12 +6,11 @@ oneOrMore:354, times:404, optional:318, greedy:335, within:186) and
 ``CEP.pattern`` (CEP.java:47) producing a PatternStream whose ``select``
 maps each match's variable->rows bindings through a user function.
 
-Lowering — the NFA core is shared with the SQL tier: patterns compile to
-the ``(var, quantifier)`` step list + ``fn(row, ctx)`` predicates of
-``operators.cep.nfa_all_matches`` (the enumerating sibling of the
-backtracking linear NFA the MATCH_RECOGNIZE tiers run on). Relaxed
-contiguity (``followed_by``) compiles to an unnamed reluctant-star skip
-step — exactly the ignore-events edge NFACompiler inserts for
+Lowering — one NFA for every CEP surface: patterns compile to the
+``(var, quantifier)`` step list + ``fn(row, ctx)`` predicates of
+``operators.cep.nfa_walk``, the backtracking walk the MATCH_RECOGNIZE
+tiers run too. Relaxed contiguity (``followed_by``) compiles to the
+``e`` entry suffix — the ignore-events edge NFACompiler inserts for
 FOLLOWED_BY. Looping patterns (``one_or_more``/``times``) default to
 RELAXED internal contiguity (Pattern.java:437 — strict only via
 ``consecutive()``), and under the default noSkip strategy every partial
@@ -325,19 +324,18 @@ class Pattern:
     # -- compilation to the shared NFA surface ------------------------------
 
     def _compile(self):
-        """Compile to the shared-NFA surface: the ``(var, quantifier)``
-        step list, the DEFINE predicates, ``multi_vars`` — the
-        non-greedy looping variables whose partial matches emit under
-        noSkip (see ``operators.cep.nfa_all_matches``) — and the
-        per-variable ``until`` stop conditions.
+        """Compile to the input of ``operators.cep.nfa_walk``: the
+        ``(var, quantifier)`` step list, the DEFINE predicates,
+        ``multi_vars`` — the non-greedy looping variables whose partial
+        matches emit under noSkip — the per-variable ``until`` stop
+        conditions and the notFollowedBy ``stops``.
 
         Negative patterns lower to NFA stop semantics: ``notNext`` is
         the ``!n`` non-consuming check, a terminal ``notFollowedBy``
         (requires ``within``) is ``!f``, and a mid-pattern
-        ``notFollowedBy`` REPLACES the following connection's skip edge
-        with a ``*?`` gap whose predicate is the NEGATED condition — a
-        matching event inside the gap cannot be consumed, killing the
-        branch exactly like the reference's stop state
+        ``notFollowedBy`` becomes the following variable's ``stops``
+        entry — its entry scan may not step over a matching event,
+        killing the branch exactly like the reference's stop state
         (NFACompiler.createMiddleStates' NOT_FOLLOW handling)."""
         steps: list[tuple[str, str]] = []
         defines: dict = {}
@@ -557,8 +555,9 @@ class PatternStream:
         import json
 
         from flink_release_1_16_0_spark.operators.cep import (
-            nfa_all_matches,
-            nfa_longest_partial,
+            NONEMPTY,
+            nfa_timed_out_partial,
+            nfa_walk,
         )
 
         if after_match not in ("no_skip", "skip_past_last_row"):
@@ -570,6 +569,8 @@ class PatternStream:
         if not tcol:
             raise ValueError("CEP needs assign_timestamps_and_watermarks (event order)")
         steps, defines, multi_vars, untils, stops = self.pattern._compile()
+        # the reference never emits an empty match
+        steps = [*steps, NONEMPTY]
         within_ms = self.pattern.within_ms
         wt = self.pattern.within_type
         if timeout_tag is not None and within_ms is None:
@@ -592,116 +593,77 @@ class PatternStream:
                 )
             )
         names = [f.name for f in schema.fields]
-        sort_cols = [tcol] + ([tiebreaker] if tiebreaker else [])
         var_names = self.pattern._var_names()
         skip_past = after_match == "skip_past_last_row"
-
-        def _nondet(sq):
-            for _v, q in sq:
-                if isinstance(q, tuple):
-                    return True  # any group pattern -> enumerate
-                if q.endswith("a"):
-                    return True
-            return False
-
         # skip_past resumes after ONE match per anchor, so enumeration
         # only serves the noSkip strategy; forking (multi vars, any-
         # connections, quantified groups) forces the enumerate path
-        enum_path = (bool(multi_vars) or _nondet(steps)) and not skip_past
+        enum_path = not skip_past and (
+            bool(multi_vars)
+            or any(isinstance(q, tuple) or q.endswith("a") for _v, q in steps)
+        )
         enum = multi_vars if enum_path else frozenset()
 
-        def pad(r: dict) -> dict:
-            return {**r, _SIDE_TAG: None, _SIDE_JSON: None} if use_side else r
+        def bindings(rows, bound) -> dict:
+            return {v: [rows[j] for j in bound.get(v, [])] for v in var_names}
 
-        def timeout_row(rows, start) -> dict | None:
-            partial = nfa_longest_partial(rows, start, steps, defines, within_ms)
-            if partial is None:
-                return None
-            bindings = {v: [rows[j] for j in partial.get(v, [])] for v in var_names}
-            t_out = _ms(rows[start]["__ts"]) + within_ms
-            r = timeout_fn(bindings, t_out)
-            return {_SIDE_TAG: timeout_tag.tag_id, _SIDE_JSON: json.dumps(r, default=str)}
+        def scan(rows: list, n_anchors: int) -> tuple[list, int]:
+            """Decide anchors ``0 .. n_anchors-1`` of the time-ordered
+            ``rows``: emit every match (enumerate path) or the first per
+            anchor, resuming per ``after_match``. An anchor left
+            unmatched has its WITHIN horizon expired (the caller only
+            passes settled anchors; a bounded input's end advances time
+            past every horizon, the reference's endInput), so its
+            partial times out exactly once. Returns the output rows and
+            the first undecided anchor."""
+            out: list[dict] = []
+            s = 0
+            while s < n_anchors:
+                hits = nfa_walk(
+                    rows, s, steps, defines, within_ms, enum,
+                    untils=untils, within_type=wt, stops=stops,
+                )
+                nxt, matched = s + 1, False
+                for end, bound in hits if enum_path else itertools.islice(hits, 1):
+                    if not any(bound.get(v) for v in var_names):
+                        continue  # binds only internal gap rows
+                    matched = True
+                    for r in emit(bindings(rows, bound)):
+                        out.append({**r, _SIDE_TAG: None, _SIDE_JSON: None} if use_side else r)
+                    if skip_past:
+                        nxt = max(end, nxt)
+                if use_side and not matched:
+                    partial = nfa_timed_out_partial(rows, s, steps, defines, within_ms)
+                    if partial is not None:
+                        t_out = _ms(rows[s]["__ts"]) + within_ms
+                        r = timeout_fn(bindings(rows, partial), t_out)
+                        out.append(
+                            {_SIDE_TAG: timeout_tag.tag_id, _SIDE_JSON: json.dumps(r, default=str)}
+                        )
+                s = nxt
+            return out, s
 
+        side = (timeout_tag,) if use_side else ()
         if keyed.stream.df.isStreaming:
-            return self._select_streaming(
-                emit, schema, names, tiebreaker, skip_past, steps, defines,
-                var_names, enum, use_side, pad, timeout_row, timeout_tag,
-                untils=untils, within_type=wt, stops=stops,
-                enum_path=enum_path,
-            )
+            return self._select_streaming(scan, schema, names, tiebreaker, side)
 
-        def harness(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        sort_cols = [tcol] + ([tiebreaker] if tiebreaker else [])
+
+        def harness(_key: tuple, pdf: pd.DataFrame) -> list:
             pdf = pdf.sort_values(sort_cols, kind="stable")
             rows = list(_row_iter(pdf.rename(columns={tcol: "__ts"})))
             # user predicates/select see the original column name too
             for r in rows:
                 r[tcol] = r["__ts"]
-            out: list[dict] = []
-            start = 0
-            while start < len(rows):
-                if enum_path:
-                    matched = False
-                    for _end, bound in nfa_all_matches(
-                        rows, start, steps, defines, within_ms, enum,
-                        untils=untils, within_type=wt, stops=stops,
-                    ):
-                        if not any(bound.get(v) for v in var_names):
-                            continue  # an all-optional empty match
-                        matched = True
-                        out.extend(
-                            pad(r)
-                            for r in emit(
-                                {v: [rows[j] for j in bound.get(v, [])] for v in var_names}
-                            )
-                        )
-                    if use_side and not matched:
-                        # bounded input: end-of-input advances time past
-                        # every WITHIN horizon, so an unmatched anchor's
-                        # partial times out (the reference's endInput)
-                        tr = timeout_row(rows, start)
-                        if tr is not None:
-                            out.append(tr)
-                    start += 1
-                    continue
-                # nfa_all_matches never yields EMPTY matches (suppressed
-                # at the NFA terminal — see operators/cep.py step()), so
-                # an all-optional pattern emits nothing per row while a
-                # reluctant optional still reaches its taken branch
-                m = next(
-                    nfa_all_matches(
-                        rows, start, steps, defines, within_ms,
-                        untils=untils, within_type=wt, stops=stops,
-                    ),
-                    None,
-                )
-                if m is not None:
-                    end, bound = m
-                    bindings = {
-                        v: [rows[j] for j in bound.get(v, [])] for v in var_names
-                    }
-                    out.extend(pad(r) for r in emit(bindings))
-                    start = max(end, start + 1) if skip_past else start + 1
-                else:
-                    if use_side:
-                        tr = timeout_row(rows, start)
-                        if tr is not None:
-                            out.append(tr)
-                    start += 1
-            return out
+            return scan(rows, len(rows))[0]
 
         from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
 
         # group-amortized per-key matching (see _grouped_apply)
         out = _grouped_apply(keyed.stream.df, list(keyed.keys), harness, schema)
-        side = (timeout_tag,) if use_side else ()
         return DataStream(keyed.env, out, None, side)
 
-    def _select_streaming(
-        self, emit, schema, names, tiebreaker, skip_past, steps, defines,
-        var_names, enum=frozenset(), use_side=False, pad=None,
-        timeout_row=None, timeout_tag=None, untils=None, within_type="first",
-        stops=None, enum_path=None,
-    ) -> DataStream:
+    def _select_streaming(self, scan, schema, names, tiebreaker, side) -> DataStream:
         """Unbounded Pattern matching with the WITHIN finalization bound
         (the CepOperator pattern, same argument as
         streaming/cep_stream.py): events buffer in keyed state; an
@@ -714,10 +676,7 @@ class PatternStream:
         order."""
         import pickle
 
-        import pandas as _pd
         from pyspark.sql.streaming.state import GroupStateTimeout
-
-        from flink_release_1_16_0_spark.operators.cep import nfa_all_matches
 
         keyed = self.keyed
         tcol = keyed.stream.time_col
@@ -744,59 +703,13 @@ class PatternStream:
                 key=lambda r: (_ms(r[tcol]), r[tiebreaker]),
             )
             unsettled = [r for r in pending if _ms(r[tcol]) > wm]
-            rows = [{**r, "__ts": _pd.Timestamp(r[tcol])} for r in settled]
-            out: list[dict] = []
-            s = decided = 0
-            while s < len(rows):
-                if _ms(rows[s][tcol]) + within_ms > wm:
-                    break  # horizon not settled: this and later anchors wait
-                if enum_path if enum_path is not None else enum:
-                    matched = False
-                    for _end, bound in nfa_all_matches(
-                        rows, s, steps, defines, within_ms, enum,
-                        untils=untils, within_type=within_type, stops=stops,
-                    ):
-                        if not any(bound.get(v) for v in var_names):
-                            continue
-                        matched = True
-                        out.extend(
-                            pad(r)
-                            for r in emit(
-                                {v: [rows[j] for j in bound.get(v, [])] for v in var_names}
-                            )
-                        )
-                    if use_side and not matched:
-                        # the anchor's horizon just expired unmatched:
-                        # its partial times out exactly once
-                        tr = timeout_row(rows, s)
-                        if tr is not None:
-                            out.append(tr)
-                    s += 1
-                    decided = s
-                    continue
-                # empty matches are suppressed at the NFA terminal (see
-                # the bounded path's note), so plain next() is exact
-                m = next(
-                    nfa_all_matches(
-                        rows, s, steps, defines, within_ms,
-                        untils=untils, within_type=within_type, stops=stops,
-                    ),
-                    None,
-                )
-                if m is not None:
-                    end, bound = m
-                    bindings = {
-                        v: [rows[j] for j in bound.get(v, [])] for v in var_names
-                    }
-                    out.extend(pad(r) for r in emit(bindings))
-                    s = max(end, s + 1) if skip_past else s + 1
-                else:
-                    if use_side:
-                        tr = timeout_row(rows, s)
-                        if tr is not None:
-                            out.append(tr)
-                    s += 1
-                decided = s
+            rows = [{**r, "__ts": pd.Timestamp(r[tcol])} for r in settled]
+            # time-ordered: the anchors whose horizon has closed are a prefix
+            n_anchors = next(
+                (i for i, r in enumerate(rows) if _ms(r[tcol]) + within_ms > wm),
+                len(rows),
+            )
+            out, decided = scan(rows, n_anchors)
             retained = settled[decided:] + unsettled
             state.update((pickle.dumps(retained),))
             if retained:
@@ -811,5 +724,4 @@ class PatternStream:
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        side = (timeout_tag,) if use_side else ()
         return DataStream(keyed.env, out, None, side)

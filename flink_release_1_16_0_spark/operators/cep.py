@@ -2,7 +2,7 @@
 
 Reference: StreamExecMatch.java:59 driving the CEP NFA
 (flink-libraries/flink-cep/.../operator/CepOperator.java:82,
-nfa/NFA.java — SURVEY.md section 2.9). Two tiers here:
+nfa/NFA.java — SURVEY.md section 2.9). Three tiers here:
 
 - **fixed-length patterns** (A then B then C on consecutive rows):
   pure window functions — LEAD the symbol k-1 times and filter. This is
@@ -13,10 +13,15 @@ nfa/NFA.java — SURVEY.md section 2.9). Two tiers here:
   equivalent for bounded keys. Partitioned by key: state is one
   document per key, the 100 TB behavior matches CepOperator's keyed
   NFA state.
+- **the NFA** (:func:`nfa_walk`, cross-variable DEFINE predicates):
+  one backtracking walk shared by the SQL batch tier (match_nfa), the
+  streaming tier (streaming/cep_stream.py) and the DataStream Pattern
+  API (datastream/cep.py).
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Sequence
 
@@ -456,198 +461,45 @@ def match_regex_all_rows(
     return _apply_per_key(tagged, keys, fn, schema)
 
 
-def nfa_try_match(
-    rows: list,
-    start: int,
-    steps: Sequence[tuple[str, str]],
-    defines: dict,
-    within_ms: int | None,
-):
-    """Backtracking linear-NFA match anchored at ``start``
-    (nfa/NFA.java's per-state predicate evaluation over the partial
-    match). Quantifiers: ``1 ? + *`` greedy plus the reluctant forms
-    ``?? +? *?`` (shortest-first preference — the reference's
-    Quantifier without the GREEDY property; CommonExecMatch.java:137
-    in fact REQUIRES patterns to end with a simple variable or a
-    reluctant quantifier). Returns (end, bindings) or None; bindings:
-    var -> list of row indices. ``rows`` are dicts with ``__ts`` plus value columns;
-    ``defines[var]`` is ``fn(row, ctx) -> bool``. Shared by the batch
-    tier (match_nfa) and the streaming tier
-    (streaming/cep_stream.streaming_cep_nfa_within).
-
-    Quantifier ``?e`` is the FLINK-SQL optional: the reference drops
-    the greedy property for optionals (CommonExecMatch.applyQuantifier
-    — ``greedy && isOptional`` is a no-op), so the optional branches
-    both ways and the run reaching the final state EARLIEST emits
-    (NFA.java's completed-match handling). A trailing ``D?e`` before
-    the last variable therefore binds empty when the match can complete
-    without it — pinned by the ported
-    MatchRecognizeITCase.testAggregates (countD = 0). Plain ``?`` keeps
-    the regex-style greedy-optional binding (this operator's
-    Pattern-API facade semantics).
-    """
-    deadline = (
-        None
-        if within_ms is None
-        else pd.Timestamp(rows[start]["__ts"])
-        + pd.Timedelta(milliseconds=within_ms)
-    )
-
-    def step(pos: int, si: int, bound: dict):
-        if si == len(steps):
-            return pos, bound
-        var, quant = steps[si]
-        pred = defines.get(var)
-
-        # ctx is built ONCE per step invocation (``bound`` is fixed for
-        # its duration) and this variable's row list is synced
-        # INCREMENTALLY against cur_taken: the previous form rebuilt
-        # every bound var's row list on every acceptance test, making a
-        # loop quantifier's maximal-run scan O(k^2) in list building.
-        # Predicates only read ctx (they receive the same mapping shape
-        # as before: every bound var, plus this var including the rows
-        # taken earlier in the current run).
-        ctx = {v: [rows[j] for j in idxs] for v, idxs in bound.items()}
-        own = ctx[var] = list(ctx.get(var, ()))
-        n_base = len(own)
-        sync = [None, 0]  # identity + length of the last-synced cur_taken
-
-        def accepts(i, cur_taken):
-            if i >= len(rows):
-                return False
-            if deadline is not None and pd.Timestamp(rows[i]["__ts"]) >= deadline:
-                # WITHIN timeout: Flink prunes at ts - start >= within,
-                # so the boundary row itself cannot extend the match
-                return False
-            if pred is None:
-                return True
-            if cur_taken is not sync[0]:
-                del own[n_base:]
-                own.extend(rows[j] for j in cur_taken)
-                sync[0], sync[1] = cur_taken, len(cur_taken)
-            elif len(cur_taken) != sync[1]:
-                # the loop scan appends to the SAME list one row at a time
-                own.extend(rows[j] for j in cur_taken[sync[1]:])
-                sync[1] = len(cur_taken)
-            return bool(pred(rows[i], ctx))
-
-        if quant in ("1", "?", "??", "?e", "?g"):
-            if quant == "??":
-                # reluctant optional: prefer skipping (Quantifier
-                # GREEDY property absent -> NFACompiler builds the
-                # ignore-first branch order)
-                r = step(pos, si + 1, bound)
-                if r is not None:
-                    return r
-            if quant == "?g":
-                # possessive optional ({n,m} greedy tail: the reference
-                # commits greedy consumption and never backtracks)
-                if accepts(pos, []):
-                    b2 = {**bound, var: bound.get(var, []) + [pos]}
-                    return step(pos + 1, si + 1, b2)
-                return step(pos, si + 1, bound)
-            take = None
-            if accepts(pos, []):
-                b2 = {**bound, var: bound.get(var, []) + [pos]}
-                take = step(pos + 1, si + 1, b2)
-                if take is not None and quant != "?e":
-                    return take
-            if quant == "?":
-                return step(pos, si + 1, bound)
-            if quant == "?e":
-                # Flink-SQL optional: both branches live; the earlier
-                # completion emits (tie prefers taking)
-                skip = step(pos, si + 1, bound)
-                if take is None or (
-                    skip is not None and skip[0] < take[0]
-                ):
-                    return skip
-                return take
-            return None
-        # + / * and their reluctant twins: the maximal run is scanned
-        # once (prefix validity is history-consistent), then candidate
-        # lengths are tried longest-first (greedy) or shortest-first
-        # (reluctant +? / *?). The POSSESSIVE +g / *g forms commit to
-        # the maximal run with no shorter retries — the reference's
-        # greedy loop (Pattern.greedy(): a run whose continuation fails
-        # DIES rather than yielding rows back; pinned by the ported
-        # MatchRecognizeITCase.testLogicalOffsets, where rows 1-3 form
-        # a valid V-shape only a backtracker would report).
-        taken: list[int] = []
-        while accepts(pos + len(taken), taken):
-            taken.append(pos + len(taken))
-        min_n = 1 if quant in ("+", "+?", "+g") else 0
-        if quant in ("+g", "*g"):
-            if len(taken) < min_n:
-                return None
-            order = [len(taken)]
-        elif quant.endswith("?"):
-            order = range(min_n, len(taken) + 1)
-        else:
-            order = range(len(taken), min_n - 1, -1)
-        for n in order:
-            bn = {**bound, var: bound.get(var, []) + taken[:n]} if n else bound
-            r = step(pos + n, si + 1, bn)
-            if r is not None:
-                return r
-        return None
-
-    return step(start, 0, {})
+# The non-empty guard step: fails a completion that binds no row. The
+# Pattern API ends every compiled pattern with it (the reference never
+# emits an empty match), so the walk backtracks past an empty
+# completion instead of committing to it.
+NONEMPTY = ("", "!0")
 
 
+@functools.lru_cache(maxsize=256)
 def _parse_loop_quant(q: str):
-    """Parse a loop quantifier into ``(min_n, max_n, reluctant,
-    relaxed, combinations)`` or None when ``q`` is not a loop. Grammar
-    (superset of :func:`nfa_try_match`'s, for the Pattern-API facade):
-
-    - ``+`` / ``*`` and reluctant ``+?`` / ``*?`` — strict-contiguous
-      runs (the MATCH_RECOGNIZE semantics);
-    - a trailing ``~`` marks RELAXED internal contiguity (Pattern API
-      default for looping patterns, Pattern.java:437 — events not
-      matching the loop condition may sit between repetitions; strict
-      only via ``consecutive()``);
-    - a trailing ``c`` (after ``~``) marks NON-DETERMINISTIC relaxed
-      contiguity (Pattern.allowCombinations:452 — matching events may
-      be skipped between repetitions too);
-    - a trailing ``e`` marks a RELAXED-ENTRY loop (the loop follows a
-      FOLLOWED_BY connection): the loop's first repetition may sit past
-      non-matching rows, so a zero-repetition branch cannot starve the
-      positive branches by short-circuiting the preceding skip step;
-    - ``{a,b}`` bounded repetition (Pattern.times(from, to)); ``{a,}``
-      unbounded (Pattern.timesOrMore:482).
-
-    Returns ``(min_n, max_n, reluctant, relaxed, combinations,
-    relaxed_entry)``.
-    """
-    entry = ""
-    if q.endswith(("e", "a")):
-        entry = q[-1]
-        q = q[:-1]
-    combos = q.endswith("c")
-    if combos:
-        q = q[:-1]
-    relaxed = q.endswith("~")
-    if relaxed:
-        q = q[:-1]
-    relaxed = relaxed or combos
-    if q in ("+", "+?"):
-        return 1, None, q == "+?", relaxed, combos, entry
-    if q in ("*", "*?"):
-        return 0, None, q == "*?", relaxed, combos, entry
-    m = re.fullmatch(r"\{(\d+),(\d*)\}(\?)?", q)
-    if m:
-        return (
-            int(m.group(1)),
-            int(m.group(2)) if m.group(2) else None,
-            bool(m.group(3)),
-            relaxed,
-            combos,
-            entry,
-        )
-    return None
+    """Parse a loop token (grammar in :func:`nfa_walk`) into ``(min_n,
+    max_n, pref, relaxed, combinations, entry)``, or None when ``q`` is
+    not a loop. ``pref`` is ``""`` (greedy), ``"?"`` (reluctant) or
+    ``"g"`` (possessive); ``entry`` is ``""``, ``"e"`` or ``"a"``."""
+    m = re.fullmatch(r"([+*]|\{(\d+),(\d*)\})([?g]?)(~c?)?([ea]?)", q)
+    if m is None:
+        return None
+    count, lo, hi, pref, contig, entry = m.groups()
+    if count == "+":
+        min_n, max_n = 1, None
+    elif count == "*":
+        min_n, max_n = 0, None
+    else:
+        min_n, max_n = int(lo), int(hi) if hi else None
+    return min_n, max_n, pref, contig is not None, contig == "~c", entry
 
 
-def nfa_all_matches(
+@functools.lru_cache(maxsize=256)
+def _parse_one_quant(q: str) -> tuple[str, str]:
+    """Split a one-row token (grammar in :func:`nfa_walk`) into ``(base,
+    entry)``; unknown tokens raise."""
+    base, entry = (q[:-1], q[-1]) if q.endswith(("e", "a")) else (q, "")
+    if base not in ("1", "?", "??", "?g", "?<") or (
+        entry == "a" and base in ("?g", "?<")
+    ):
+        raise ValueError(f"unknown quantifier {q!r}")
+    return base, entry
+
+
+def nfa_walk(
     rows: list,
     start: int,
     steps: Sequence[tuple[str, str]],
@@ -658,76 +510,135 @@ def nfa_all_matches(
     within_type: str = "first",
     stops: dict | None = None,
 ):
-    """Enumerating sibling of :func:`nfa_try_match` for the flink-cep
-    Pattern API (NFACompiler's looping states + AfterMatchSkipStrategy.
-    noSkip): yields EVERY ``(end, bindings)`` the NFA accepts from the
-    anchor, where
+    """The backtracking linear NFA (nfa/NFA.java's per-state predicate
+    evaluation over the partial match, NFACompiler's state graph) that
+    every CEP surface runs on: the SQL MATCH_RECOGNIZE tiers
+    (:func:`match_nfa`, ``streaming/cep_stream.streaming_cep_nfa_within``)
+    take ``next(nfa_walk(...), None)``, the DataStream Pattern API
+    (``datastream/cep.py``) takes the first match or enumerates all.
 
-    - variables in ``multi_vars`` (the non-greedy looping patterns —
-      Flink's default oneOrMore/times(a,b) emit every partial match of
-      the loop, Quantifier without the GREEDY property) enumerate all
-      viable repetition counts, shortest first;
-    - every other step is DETERMINISTIC: choices are tried in
-      preference order (greedy longest-first, reluctant
-      shortest-first) and the first choice with any full match commits
-      — so unnamed relaxed-contiguity skip steps never fork matches.
+    Returns an iterator over every ``(end, bindings)`` the NFA accepts
+    from the anchor ``start``, in preference order; ``bindings`` maps
+    var -> list of row indices. ``rows`` are dicts with ``__ts`` plus
+    value columns;
+    ``defines[var]`` is ``fn(row, ctx) -> bool`` where ``ctx`` maps each
+    bound variable to its rows, including ``var``'s rows taken earlier
+    in the current run (variables without an entry accept any row).
+    ``within_ms`` prunes rows at or past ``start_ts + within`` (Flink
+    times a partial match out when ``ts - start >= within``); with
+    ``within_type="previous"`` (Pattern.within(d, WithinType):266) it
+    bounds the gap between CONSECUTIVE matched rows instead.
 
-    Quantifiers additionally support relaxed internal contiguity
-    (``+~`` / ``*~`` / ``{a,b}~`` — see :func:`_parse_loop_quant`):
-    rows failing the loop predicate are stepped over instead of ending
-    the run (matching rows are never skipped — that would be
-    Pattern.allowCombinations, which is out of scope).
+    Steps are DETERMINISTIC: choices are tried in preference order and
+    the first choice whose continuation yields any match commits.
+    Variables in ``multi_vars`` (the Pattern API's non-greedy loops and
+    optionals under AfterMatchSkipStrategy.noSkip) instead fork every
+    viable choice, shortest first. ``untils[var]`` stops a loop before
+    the first row it accepts (Pattern.until:228); ``stops[var]`` is a
+    notFollowedBy condition no entry scan into ``var`` may step over.
+    A completion binding no row is returned like any other; append
+    :data:`NONEMPTY` to reject it.
 
-    ``nfa_try_match`` (used by the SQL MATCH_RECOGNIZE tiers, where
-    contiguity is strict by definition) is intentionally untouched —
-    ``next(nfa_all_matches(...))`` with no ``multi_vars`` reproduces
-    its greedy single match over this grammar.
+    Quantifier grammar (each token has one meaning):
+
+    - ``1`` exactly one row; ``?`` greedy optional (take first, then
+      skip); ``??`` reluctant optional (skip first);
+    - ``?g`` possessive optional: takes the row whenever it accepts and
+      never retries the skip (the SQL ``{n,m}`` greedy tail);
+    - ``?<`` the Flink-SQL optional: the reference drops the greedy
+      property for optionals (CommonExecMatch.applyQuantifier), so both
+      branches live and the EARLIER completion wins, ties preferring
+      the take (MatchRecognizeITCase.testAggregates pins countD = 0);
+    - loops ``+`` ``*`` ``{a,b}`` ``{a,}`` (Pattern.times /
+      timesOrMore) followed by a preference: none = greedy
+      (longest first, backtracking to shorter runs), ``?`` = reluctant
+      (shortest first), ``g`` = possessive (the maximal run only; a
+      failed continuation dies instead of yielding rows back — SQL
+      greedy loops, pinned by MatchRecognizeITCase.testLogicalOffsets);
+    - loop contiguity suffix: none = strict (the run ends at the first
+      non-accepting row), ``~`` = relaxed (Pattern.java:437 — rows
+      failing the loop condition may sit between repetitions), ``~c``
+      = allowCombinations (Pattern.allowCombinations:452 — matching
+      rows may be skipped too; the first repetition is fixed);
+    - entry suffix on any one- or loop token: none = the first row must
+      sit at the current position (next()), ``e`` = followedBy (the
+      FIRST accepting row later on is taken; a failed continuation
+      dies rather than trying a later candidate — the NFA ignore edge
+      cannot skip a matching event), ``a`` = followedByAny (every
+      accepting position forks); ``?g`` and ``?<`` take no ``a``;
+    - non-consuming checks: ``!n`` notNext (the row at the position
+      must not match), ``!f`` terminal notFollowedBy with within (no
+      in-window row may match), ``!0`` the :data:`NONEMPTY` guard;
+    - ``("G", substeps, quant, consecutive, entry_name, times_optional)``
+      a group pattern (Pattern.begin(Pattern), Pattern.java:573): each
+      repetition matches the whole sub-sequence.
     """
-    deadline = (
-        None
-        if within_ms is None or within_type != "first"
-        else pd.Timestamp(rows[start]["__ts"])
-        + pd.Timedelta(milliseconds=within_ms)
-    )
-    # PREVIOUS_AND_CURRENT (Pattern.within(d, WithinType):266): the
-    # bound is the max gap between CONSECUTIVE matched events, not
-    # first-to-last — enforced per accepted row in accepts()
-    prev_gap_ms = within_ms if within_type == "previous" else None
+    # time bounds in int ns (cheaper than Timestamp arithmetic per row)
+    deadline = prev_gap = None
+    if within_ms is not None:
+        if within_type == "first":
+            deadline = pd.Timestamp(rows[start]["__ts"]).value + within_ms * 1_000_000
+        elif within_type == "previous":
+            prev_gap = within_ms * 1_000_000
     untils = untils or {}
-    # stops[var]: a notFollowedBy condition guarding var's ENTRY — the
-    # relaxed-entry scan may not step over a matching row (the NFA stop
-    # state on the ignore edges leading into var's first repetition)
     stops = stops or {}
 
     def in_window(i: int) -> bool:
         return i < len(rows) and (
-            deadline is None or pd.Timestamp(rows[i]["__ts"]) < deadline
+            deadline is None or pd.Timestamp(rows[i]["__ts"]).value < deadline
         )
 
-    def step(seq, pos: int, si: int, bound: dict, cont):
+    def step(seq, pos: int, si: int, bound: dict, cont, out: list) -> None:
         # continuation-passing walk: ``seq`` is the (sub-)pattern being
-        # matched, ``cont(pos, bound)`` generates completions of the
-        # ENCLOSING pattern — group patterns (Pattern.begin(Pattern),
-        # Pattern.java:573) recurse by walking the group body with a
+        # matched, ``cont(pos, bound, out)`` matches the rest of the
+        # ENCLOSING pattern and appends each full completion to ``out``
+        # — group patterns recurse by walking the group body with a
         # continuation that matches the next repetition / outer tail
         if si == len(seq):
-            yield from cont(pos, bound)
+            cont(pos, bound, out)
             return
         var, quant = seq[si]
-        if isinstance(quant, tuple) and quant[0] == "G":
-            yield from group_step(seq, pos, si, bound, cont, quant)
+        if isinstance(quant, tuple):
+            group_step(seq, pos, si, bound, cont, out, quant)
+            return
+        if quant == "!0":
+            if any(bound.values()):
+                step(seq, pos, si + 1, bound, cont, out)
             return
         pred = defines.get(var)
 
-        def _ctx(cur_taken: list) -> dict:
-            ctx = {v: [rows[j] for j in idxs] for v, idxs in bound.items()}
-            ctx[var] = ctx.get(var, []) + [rows[j] for j in cur_taken]
+        # ctx is built at most ONCE per step invocation (``bound`` is
+        # fixed for its duration) and this variable's row list is synced
+        # INCREMENTALLY against cur_taken, so a loop's maximal-run scan
+        # stays linear instead of rebuilding every bound row list per
+        # acceptance test
+        ctx = own = synced = None
+        n_base = 0
+
+        def ctx_for(cur_taken: Sequence[int]) -> dict:
+            nonlocal ctx, own, synced, n_base
+            if ctx is None:
+                ctx = {v: [rows[j] for j in idxs] for v, idxs in bound.items()}
+                own = ctx[var] = list(ctx.get(var, ()))
+                n_base = len(own)
+                synced = ()
+            if cur_taken is not synced:
+                del own[n_base:]
+                if cur_taken:
+                    own.extend([rows[j] for j in cur_taken])
+                synced = cur_taken
+            elif (n := len(own) - n_base) + 1 == len(cur_taken):
+                own.append(rows[cur_taken[-1]])  # the loop scan's append
+            elif n != len(cur_taken):
+                # the same list changed length otherwise: a shrunk list
+                # must not leave stale rows
+                del own[n_base + len(cur_taken):]
+                own.extend([rows[j] for j in cur_taken[n:]])
             return ctx
 
-        def accepts(i: int, cur_taken: list) -> bool:
-            if not in_window(i):
-                return False
-            if prev_gap_ms is not None:
+        def accepts(i: int, cur_taken: Sequence[int]) -> bool:
+            # callers have checked in_window(i)
+            if prev_gap is not None:
                 last = max(
                     (j for idxs in bound.values() for j in idxs),
                     default=max(cur_taken, default=None),
@@ -735,207 +646,168 @@ def nfa_all_matches(
                 if cur_taken:
                     last = max(last, cur_taken[-1]) if last is not None else cur_taken[-1]
                 if last is not None and (
-                    pd.Timestamp(rows[i]["__ts"]) - pd.Timestamp(rows[last]["__ts"])
-                ) >= pd.Timedelta(milliseconds=prev_gap_ms):
+                    pd.Timestamp(rows[i]["__ts"]).value
+                    - pd.Timestamp(rows[last]["__ts"]).value
+                ) >= prev_gap:
                     return False
             if pred is None:
                 return True
-            return bool(pred(rows[i], _ctx(cur_taken)))
+            return bool(pred(rows[i], ctx_for(cur_taken)))
 
-        def first_success(choices):
-            # deterministic preference order: commit to the first
-            # choice whose continuation yields at least one match
-            for np, nb in choices:
-                hit = False
-                for r in step(seq, np, si + 1, nb, cont):
-                    hit = True
-                    yield r
-                if hit:
-                    return
-
-        if quant == "!n":
-            # notNext (Pattern.notNext:294): the event AT pos must not
-            # match; nothing is consumed (NFA stop state)
-            if pos < len(rows) and in_window(pos) and accepts(pos, []):
-                return
-            yield from step(seq, pos, si + 1, bound, cont)
-            return
-        if quant == "!f":
-            # terminal notFollowedBy-with-within (Pattern.notFollowedBy
-            # :325, FLINK-23122): the match holds only if NO in-window
-            # row from pos on matches the absence condition
-            i = pos
-            while in_window(i):
-                if accepts(i, []):
-                    return
-                i += 1
-            yield from step(seq, pos, si + 1, bound, cont)
-            return
-        loop = _parse_loop_quant(quant)
-        if loop is None:
-            base, sfx = quant, ""
-            if base.endswith(("e", "a")):
-                base, sfx = base[:-1], base[-1]
-            stop_pred = stops.get(var)
-            if sfx == "a":
-                # followedByAny (Pattern.followedByAny:343): EVERY
-                # accepting position forks — the NFA's non-deterministic
-                # ignore edge that may also skip matching events
-                i = pos
-                takes = []
-                while in_window(i):
-                    if stop_pred is not None and stop_pred(rows[i], _ctx([])):
-                        break  # stop state: cannot scan past
-                    if accepts(i, []):
-                        takes.append(
-                            (i + 1, {**bound, var: bound.get(var, []) + [i]})
-                        )
-                    i += 1
-                for np, nb in takes:
-                    yield from step(seq, np, si + 1, nb, cont)
-                if base in ("?", "??"):
-                    yield from step(seq, pos, si + 1, bound, cont)
-                return
-            # eager: relaxed contiguity takes the FIRST accepting row —
-            # the NFA ignore edge cannot skip a matching event, so a
-            # failed continuation DIES rather than backtracking to a
-            # later candidate (GroupITCase.testGroupNotNext pins this)
-            i = pos
-            take = None
-            while in_window(i):
-                if accepts(i, []):
-                    take = (i + 1, {**bound, var: bound.get(var, []) + [i]})
-                    break
-                if sfx != "e":
-                    break  # strict contiguity: only the row AT pos
-                if stop_pred is not None and stop_pred(rows[i], _ctx([])):
-                    break  # notFollowedBy gap: a matching row kills
-                i += 1
-            skip = (pos, bound)
-            if base == "1":
-                choices = [take] if take else []
-            elif base == "?":
-                choices = ([take] if take else []) + [skip]
-            elif base == "??":
-                choices = [skip] + ([take] if take else [])
-            else:
-                raise ValueError(f"unknown quantifier {quant!r}")
-            if var in multi_vars and base in ("?", "??"):
-                # a non-greedy OPTIONAL branches like a {0,1} loop under
-                # noSkip: both the taken and the skipped continuation
-                # emit (the reference docs' {C B} alongside {C A1 B})
-                for np, nb in choices:
-                    yield from step(seq, np, si + 1, nb, cont)
-            else:
-                yield from first_success(choices)
-            return
-        min_n, max_n, reluctant, relaxed, combos, entry = loop
         stop_pred = stops.get(var)
-        if entry == "a":
-            # followedByAny loop: every viable FIRST-repetition position
-            # forks; each candidate runs the count scan anchored there
-            # with min >= 1 (the zero-repetition branch emits ONCE below)
-            anchored_q = (
-                f"{{{max(1, min_n)},{'' if max_n is None else max_n}}}"
-                + ("?" if reluctant else "")
-                + ("~" if relaxed else "")
-                + ("c" if combos else "")
-                + "e"
-            )
-            if min_n == 0:
-                yield from step(seq, pos, si + 1, bound, cont)
+
+        def stopped(i: int) -> bool:
+            return stop_pred is not None and bool(stop_pred(rows[i], ctx_for(())))
+
+        def bind(idxs: list) -> dict:
+            return {**bound, var: bound.get(var, []) + idxs} if idxs else bound
+
+        # every branch below lists its choices of (next pos, bindings) in
+        # preference order; ``fork`` continues ALL of them, otherwise the
+        # first choice whose continuation yields any match commits
+        skip = (pos, bound)
+        fork = False
+        if quant == "!n":
+            # notNext (Pattern.notNext:294): the row AT pos must not
+            # match; nothing is consumed (NFA stop state)
+            choices = [] if in_window(pos) and accepts(pos, ()) else [skip]
+        elif quant == "!f":
+            # terminal notFollowedBy-with-within (Pattern.notFollowedBy
+            # :325, FLINK-23122): no in-window row from pos on may match
+            i = pos
+            while in_window(i) and not accepts(i, ()):
+                i += 1
+            choices = [] if in_window(i) else [skip]
+        elif (loop := _parse_loop_quant(quant)) is None:
+            base, sfx = _parse_one_quant(quant)
+            takes = []
             i = pos
             while in_window(i):
-                if stop_pred is not None and stop_pred(rows[i], _ctx([])):
-                    break
-                if accepts(i, []):
-                    yield from step(
-                        [(var, anchored_q), *seq[si + 1 :]], i, 0, bound, cont
-                    )
+                if sfx == "a" and stopped(i):
+                    break  # stop state: cannot scan past
+                if accepts(i, ()):
+                    takes.append((i + 1, bind([i])))
+                    if sfx != "a":
+                        break  # next / followedBy: the FIRST accepting row
+                elif not sfx or (sfx == "e" and stopped(i)):
+                    break  # strict: only the row AT pos
                 i += 1
-            return
-        # relaxed-entry loops (FOLLOWED_BY connection) find their own
-        # first repetition past non-matching rows — a zero-repetition
-        # success must not starve the positive branches
-        first = pos
-        blocked = False
-        if entry:
-            while in_window(first) and not accepts(first, []):
-                if stop_pred is not None and stop_pred(rows[first], _ctx([])):
-                    blocked = True  # stop state: cannot scan past
-                    break
-                first += 1
-        if combos and var in multi_vars:
-            # allowCombinations: the loop's FIRST repetition is fixed
-            # (entering the loop is plain relaxed contiguity — every
-            # combination in the reference docs starts with A1), then
-            # any in-order subset of later accepting rows may follow;
-            # predicates re-evaluate against the actual chosen prefix,
-            # so iterative conditions stay correct per branch
-            choices = []
-            if min_n == 0:
-                choices.append((pos, bound))
-            if in_window(first) and accepts(first, []):
-
-                def rec(chosen: list) -> None:
-                    if len(chosen) >= max(min_n, 1):
-                        nb = {**bound, var: bound.get(var, []) + chosen}
-                        choices.append((chosen[-1] + 1, nb))
-                    if max_n is not None and len(chosen) >= max_n:
-                        return
-                    for j in range(chosen[-1] + 1, len(rows)):
-                        if not in_window(j):
-                            break
-                        if accepts(j, chosen):
-                            rec(chosen + [j])
-
-                rec([first])
-            for np, nb in choices:
-                yield from step(seq, np, si + 1, nb, cont)
-            return
-        # scan the candidate run once: strict ends at the first
-        # non-accepting row; relaxed steps over it (but never skips a
-        # matching row; without the entry marker the first repetition
-        # must sit at ``pos`` — contiguity TO the loop is the preceding
-        # connection's business)
-        taken: list[int] = []
-        i = first
-        u = untils.get(var)
-        while not blocked and in_window(i) and (max_n is None or len(taken) < max_n):
-            if u is not None and u(rows[i], _ctx(taken)):
-                break  # until-condition: stop BEFORE the matching row
-                # (Pattern.until:228 — the stopping event is excluded)
-            if accepts(i, taken):
-                taken.append(i)
-            elif not relaxed or not taken:
-                break
-            i += 1
-        hi = len(taken)
-        ns = (
-            range(min_n, hi + 1)
-            if (reluctant or var in multi_vars)
-            else range(hi, min_n - 1, -1)
-        )
-        choices = []
-        for n in ns:
-            if n > hi:
-                continue
-            np = pos if n == 0 else taken[n - 1] + 1
-            nb = {**bound, var: bound.get(var, []) + taken[:n]} if n else bound
-            choices.append((np, nb))
-        if var in multi_vars:
-            for np, nb in choices:
-                yield from step(seq, np, si + 1, nb, cont)
+            if base == "?<":
+                # both branches live: the EARLIER completion wins, a tie
+                # keeps the take (listed first)
+                branches = []
+                for np, nb in [*takes, skip]:
+                    branches.append([])
+                    step(seq, np, si + 1, nb, cont, branches[-1])
+                live = [(b[0][0], n) for n, b in enumerate(branches) if b]
+                if live:
+                    out.extend(branches[min(live)[1]])
+                return
+            if sfx == "a":
+                # followedByAny: every accepting position forks
+                choices = takes if base == "1" else [*takes, skip]
+                fork = True
+            elif base == "1":
+                choices = takes
+            elif base == "?g":
+                choices = takes or [skip]
+            else:
+                choices = [skip, *takes] if base == "??" else [*takes, skip]
+                # a non-greedy OPTIONAL under noSkip branches like a
+                # {0,1} loop (the reference docs' {C B} alongside {C A1 B})
+                fork = var in multi_vars
         else:
-            yield from first_success(choices)
+            min_n, max_n, pref, relaxed, combos, entry = loop
+            if entry == "a":
+                # followedByAny loop: every viable FIRST-repetition
+                # position forks; each candidate runs the count scan
+                # anchored there with min >= 1 (the zero-repetition
+                # branch emits ONCE)
+                anchored_q = (
+                    f"{{{max(1, min_n)},{'' if max_n is None else max_n}}}"
+                    + pref
+                    + ("~c" if combos else "~" if relaxed else "")
+                    + "e"
+                )
+                if min_n == 0:
+                    step(seq, pos, si + 1, bound, cont, out)
+                i = pos
+                while in_window(i) and not stopped(i):
+                    if accepts(i, ()):
+                        step([(var, anchored_q), *seq[si + 1 :]], i, 0, bound, cont, out)
+                    i += 1
+                return
+            # relaxed-entry loops (FOLLOWED_BY connection) find their own
+            # first repetition past non-matching rows — a zero-repetition
+            # success must not starve the positive branches
+            first = pos
+            blocked = False
+            if entry:
+                while in_window(first) and not accepts(first, ()):
+                    if stopped(first):
+                        blocked = True  # stop state: cannot scan past
+                        break
+                    first += 1
+            fork = var in multi_vars
+            if combos and fork:
+                # allowCombinations: the loop's FIRST repetition is
+                # fixed, then any in-order subset of later accepting rows
+                # may follow; predicates re-evaluate against the actual
+                # chosen prefix, so iterative conditions stay correct
+                choices = [skip] if min_n == 0 else []
+                if in_window(first) and accepts(first, ()):
 
-    def group_step(seq, pos, si, bound, cont, gspec):
-        """A GROUP step: gspec = ("G", substeps, gq, consecutive).
-        Repetitions match ALL-OR-NOTHING (the whole sub-sequence);
-        between repetitions contiguity is relaxed unless consecutive()
-        (Pattern.java:437 applies to group loops too). Counts enumerate
-        shortest-first — the reference's non-greedy group loop under
-        noSkip emits every viable count; exact times(n) pins one."""
+                    def rec(chosen: list) -> None:
+                        if len(chosen) >= max(min_n, 1):
+                            choices.append((chosen[-1] + 1, bind(chosen)))
+                        if max_n is not None and len(chosen) >= max_n:
+                            return
+                        for j in range(chosen[-1] + 1, len(rows)):
+                            if not in_window(j):
+                                break
+                            if accepts(j, chosen):
+                                rec(chosen + [j])
+
+                    rec([first])
+            else:
+                # scan the candidate run once (prefix validity is
+                # history-consistent): strict ends at the first
+                # non-accepting row; relaxed steps over it but never
+                # skips a matching row
+                taken: list[int] = []
+                i = first
+                u = untils.get(var)
+                while not blocked and in_window(i) and (max_n is None or len(taken) < max_n):
+                    if u is not None and u(rows[i], ctx_for(taken)):
+                        break  # until: stop BEFORE the matching row
+                    if accepts(i, taken):
+                        taken.append(i)
+                    elif not relaxed or not taken:
+                        break
+                    i += 1
+                hi = len(taken)
+                if pref == "g":
+                    ns = [hi] if hi >= min_n else []
+                elif pref == "?" or fork:
+                    ns = range(min_n, hi + 1)
+                else:
+                    ns = range(hi, min_n - 1, -1)
+                # lazy: a committed greedy choice builds no shorter run
+                choices = ((taken[n - 1] + 1, bind(taken[:n])) if n else skip for n in ns)
+        for np, nb in choices:
+            n_out = len(out)
+            step(seq, np, si + 1, nb, cont, out)
+            if len(out) > n_out and not fork:
+                return
+
+    def group_step(seq, pos, si, bound, cont, out, gspec):
+        """A GROUP step: gspec = ("G", substeps, gq, consecutive,
+        entry_name, times_optional). Repetitions match ALL-OR-NOTHING
+        (the whole sub-sequence); between repetitions contiguity is
+        relaxed unless consecutive() (Pattern.java:437 applies to group
+        loops too). Counts enumerate shortest-first — the reference's
+        non-greedy group loop under noSkip emits every viable count;
+        exact times(n) pins one."""
         _tag, substeps, gq, consecutive, entry_name, times_opt = gspec
         if gq in ("1", "?", "??"):
             min_n, max_n = (1, 1) if gq == "1" else (0, 1)
@@ -947,134 +819,53 @@ def nfa_all_matches(
         gap = [] if consecutive else [(f"__gskip{si}", "*?")]
         entry_gap = [(entry_name, "*?")] if entry_name else []
 
-        def after_outer(p, b):
-            yield from step(seq, p, si + 1, b, cont)
-
-        def grow(p, b, done):
+        def grow(p, b, o, done):
             if done >= min_n or (done == 0 and times_opt):
                 # times(n).optional(): the zero-count branch joins a
                 # non-zero exact/range count (Quantifier.optional)
-                yield from after_outer(p, b)
+                step(seq, p, si + 1, b, cont, o)
             if max_n is not None and done >= max_n:
                 return
             rep = [*entry_gap, *substeps] if done == 0 else [*gap, *substeps]
-            yield from step(
-                rep, p, 0, b,
-                cont=lambda p2, b2, _d=done: grow(p2, b2, _d + 1),
-            )
+            step(rep, p, 0, b, lambda p2, b2, o2, _d=done: grow(p2, b2, o2, _d + 1), o)
 
-        yield from grow(pos, bound, 0)
+        grow(pos, bound, out, 0)
 
-    def done(pos, bound):
-        # suppress EMPTY matches (no event bound anywhere): the
-        # reference never emits them, and — critically — an empty
-        # branch must not count as a hit inside first_success, or a
-        # reluctant optional's skip branch would commit and shadow
-        # its taken (non-empty) branch
-        if any(bound.values()):
-            yield pos, bound
+    def done(pos, bound, out):
+        out.append((pos, bound))
 
-    yield from step(steps, start, 0, {}, done)
+    # eager: a walk without forking steps has at most one completion
+    # (each step commits to one choice), so the first match costs the
+    # same as all of them
+    out: list = []
+    step(steps, start, 0, {}, done, out)
+    return iter(out)
 
 
-def nfa_longest_partial(
+def nfa_timed_out_partial(
     rows: list,
     start: int,
     steps: Sequence[tuple[str, str]],
     defines: dict,
     within_ms: int | None,
 ):
-    """The greedy principal PARTIAL match anchored at ``start`` — what
-    the reference's TimedOutPartialMatchHandler receives when a
-    computation's WITHIN horizon expires before the pattern completes
-    (CepOperator.java's timeout path; PatternStream.select timeout
-    variant). Returns ``var -> [row indices]`` for the longest greedy
-    prefix of ``steps`` that binds, or None when no row binds (no
-    computation ever started at this anchor, so there is nothing to
-    time out). One branch only — the NFA's principal (greedy) branch —
-    which is the deterministic single-partial approximation of the
-    reference's per-branch timeout emission."""
-    deadline = (
-        None
-        if within_ms is None
-        else pd.Timestamp(rows[start]["__ts"])
-        + pd.Timedelta(milliseconds=within_ms)
-    )
-    pos = start
-    bound: dict = {}
-
-    def accepts(var, pred, i, cur_taken):
-        if i >= len(rows):
-            return False
-        if deadline is not None and pd.Timestamp(rows[i]["__ts"]) >= deadline:
-            return False
-        if pred is None:
-            return True
-        ctx = {v: [rows[j] for j in idxs] for v, idxs in bound.items()}
-        ctx[var] = ctx.get(var, []) + [rows[j] for j in cur_taken]
-        return bool(pred(rows[i], ctx))
-
-    pending_entry = False
-    for var, quant in steps:
-        if isinstance(quant, tuple) or quant in ("!n", "!f"):
-            # negative steps bind nothing in a partial walk; group
-            # steps are skipped (timeout estimation stays the flat
-            # principal prefix)
-            continue
-        pred = defines.get(var)
-        sfx = ""
-        if quant and quant[-1] in ("e", "a") and quant not in ("!n", "!f"):
-            sfx = quant[-1]
-            if _parse_loop_quant(quant) is None:
-                quant = quant[:-1]
-        loop = _parse_loop_quant(quant)
-        if var.startswith("__not") and loop is not None:
-            # a notFollowedBy gap behaves like the unconditioned skip
-            # for timeout estimation (its kill semantics only matter
-            # for completed matches)
-            pending_entry = True
-            continue
-        if var.startswith("__skip") and pred is None and loop is not None:
-            # the unnamed relaxed-contiguity skip edge: in this greedy
-            # partial walk it must NOT consume rows the next variable
-            # would bind (an unconditioned star accepts everything) —
-            # defer it as entry relaxation for the following step
-            pending_entry = True
-            continue
-        entry_scan = pending_entry or bool(loop and loop[5]) or bool(sfx)
-        pending_entry = False
-        if loop is None:
-            i = pos
-            if entry_scan:
-                while i < len(rows) and not accepts(var, pred, i, []):
-                    i += 1
-            if accepts(var, pred, i, []):
-                bound[var] = bound.get(var, []) + [i]
-                pos = i + 1
-            elif quant in ("?", "??"):
-                continue
-            else:
-                break
-        else:
-            min_n, max_n, _reluctant, relaxed, _combos, _entry = loop
-            taken: list[int] = []
-            i = pos
-            if entry_scan:
-                while i < len(rows) and not accepts(var, pred, i, []):
-                    i += 1
-            while i < len(rows) and (max_n is None or len(taken) < max_n):
-                if accepts(var, pred, i, taken):
-                    taken.append(i)
-                elif not relaxed or not taken:
-                    break
-                i += 1
-            if len(taken) < min_n:
-                break
-            if taken:
-                bound[var] = bound.get(var, []) + taken
-                pos = taken[-1] + 1
-    named = {v: idxs for v, idxs in bound.items() if not v.startswith("__")}
-    return named if any(named.values()) else None
+    """The partial match an unmatched anchor hands to the reference's
+    TimedOutPartialMatchHandler when its WITHIN horizon expires
+    (CepOperator.java's timeout path; PatternStream.select's timeout
+    variant): the first match of the LONGEST proper pattern prefix that
+    the walk completes from ``start``, as ``var -> [row indices]`` over
+    the named (non-``__``) variables — or None when no prefix binds one
+    (no computation ever started at this anchor). One branch only, the
+    walk's preferred one: the deterministic single-partial
+    approximation of the reference's per-branch timeout emission."""
+    body = [st for st in steps if st != NONEMPTY]
+    for k in range(len(body) - 1, 0, -1):
+        m = next(nfa_walk(rows, start, [*body[:k], NONEMPTY], defines, within_ms), None)
+        if m is not None:
+            named = {v: idxs for v, idxs in m[1].items() if not v.startswith("__")}
+            if any(named.values()):
+                return named
+    return None
 
 
 def match_nfa(
@@ -1106,9 +897,9 @@ def match_nfa(
     then each measure with RUNNING semantics over the variable's bound
     rows up to and including the current row.
 
-    ``steps`` is the linear pattern: (variable, quantifier) with
-    quantifier in ``1 ? + *`` (greedy, with backtracking) or the
-    reluctant ``?? +? *?`` (shortest-first).
+    ``steps`` is the linear pattern: (variable, quantifier) in the
+    grammar of :func:`nfa_walk`, whose first match per anchor is taken
+    (a completion binding no row is no match).
     ``defines[var]`` is ``fn(row, ctx) -> bool`` where ``row`` is the
     candidate row as a dict and ``ctx`` maps each variable to its
     already-bound rows in the current partial match — so a predicate
@@ -1158,9 +949,6 @@ def match_nfa(
     def col_name(c: str) -> str:
         return "__ts" if c == ts_col else "__id" if c == id_col else c
 
-    def try_match(rows: list[dict], start: int):
-        return nfa_try_match(rows, start, steps, defines, within_ms)
-
     def _var_idxs(bound: dict, var: str) -> list:
         if var == "*":  # universal variable: every bound row, in order
             return sorted({i for idxs in bound.values() for i in idxs})
@@ -1175,7 +963,7 @@ def match_nfa(
         keyvals = [pdf.iloc[0][k] for k in keys]
         pos, m_no = 0, 0
         while pos < len(rows):
-            res = try_match(rows, pos)
+            res = next(nfa_walk(rows, pos, steps, defines, within_ms), None)
             if res is None or res[0] == pos:
                 pos += 1
                 continue

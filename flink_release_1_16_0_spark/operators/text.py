@@ -23,12 +23,11 @@ from pyspark.sql import functions as F
 # in both the Spark-SQL and DuckDB text twins (spark_sql_tokens /
 # sql_tokens); Spark SQL string literals process backslash escapes, so
 # a pattern containing a backslash or quote would silently diverge from
-# the Column twin (which passes it verbatim). The assert pins the
+# the Column twin (which passes it verbatim). The check pins the
 # escape-free property the twins rely on.
 _TOKEN_SPLIT = "[^a-z0-9]+"
-assert not set(_TOKEN_SPLIT) & set("\\'\""), (
-    "_TOKEN_SPLIT must stay escape-free for SQL-literal embedding"
-)
+if set(_TOKEN_SPLIT) & set("\\'\""):
+    raise ValueError("_TOKEN_SPLIT must stay escape-free for SQL-literal embedding")
 
 # A small English stopword set (public, common to every IR textbook).
 STOPWORDS = (

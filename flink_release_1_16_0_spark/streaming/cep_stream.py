@@ -49,6 +49,23 @@ from pyspark.sql.types import (
 )
 
 
+def _make_conv(dt):
+    """Value converter from a pandas cell to the keyed-state row field
+    of Spark type ``dt`` (NaN/NaT -> None)."""
+    name = dt.typeName()
+    if name in ("long", "integer", "short", "byte"):
+        return lambda v: None if pd.isna(v) else int(v)
+    if name in ("double", "float"):
+        return lambda v: None if pd.isna(v) else float(v)
+    if name.startswith("timestamp"):
+        return lambda v: None if pd.isna(v) else pd.Timestamp(v)
+    return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
+
+
+def _ms(t) -> int:
+    return pd.Timestamp(t).value // 1_000_000
+
+
 def streaming_cep_within(
     stream: DataFrame,
     keys: Sequence[str],
@@ -99,12 +116,10 @@ def streaming_cep_within(
         raise ValueError(
             f"streaming CEP supports past_last_row / to_next_row, got {skip!r}"
         )
-    from flink_release_1_16_0_spark.operators.cep import _AGGS, _measure_value
+    from flink_release_1_16_0_spark.operators.cep import _check_agg, _measure_value
 
-    if measures:
-        for alias, (_var, agg, _col, _t) in measures.items():
-            if agg not in _AGGS:
-                raise ValueError(f"{alias}: unsupported agg {agg}")
+    for alias, (_var, agg, _col, _t) in (measures or {}).items():
+        _check_agg(alias, agg)
     rx = re.compile(pattern)
     tagged = stream.select(
         *keys,
@@ -175,23 +190,10 @@ def streaming_cep_within(
     )
     slice_cols = ["__ts", "__id", "__sym", *value_cols]
 
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in val_fields]
+    convs = [_make_conv(f.dataType) for f in val_fields]
 
     def col_name(c: str) -> str:
         return "__ts" if c == ts_col else "__id" if c == id_col else c
-
-    def ms(t) -> int:
-        return pd.Timestamp(t).value // 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -208,7 +210,7 @@ def streaming_cep_within(
             if len(pdf) == 0:
                 continue
             for tup in pdf[slice_cols].itertuples(index=False, name=None):
-                if ms(tup[0]) <= wm:
+                if _ms(tup[0]) <= wm:
                     continue  # late beyond the watermark: dropped
                 pending.append(
                     (
@@ -219,9 +221,9 @@ def streaming_cep_within(
                     )
                 )
         settled = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
+            (p for p in pending if _ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
         )
-        unsettled = [p for p in pending if ms(p[0]) > wm]
+        unsettled = [p for p in pending if _ms(p[0]) > wm]
 
         sym = "".join(p[2] for p in settled)
         ts_ns = np.array([p[0].value for p in settled], dtype="int64")
@@ -235,7 +237,7 @@ def streaming_cep_within(
             e_max = int(ts_ns.searchsorted(ts_ns[s] + bound_ns, "left"))
             m = rx.match(sym, s, e_max)
             if m and m.end() > m.start():
-                if ms(settled[s][0]) + within_ms <= wm:
+                if _ms(settled[s][0]) + within_ms <= wm:
                     if all_rows:
                         sdf = pd.DataFrame(
                             settled[m.start() : m.end()], columns=slice_cols
@@ -310,7 +312,7 @@ def streaming_cep_within(
         # retire unconsumed settled rows outside the WITHIN horizon:
         # provably unreachable by any future match (module docstring)
         retained = [
-            p for p in settled[consumed:] if ms(p[0]) + within_ms > wm
+            p for p in settled[consumed:] if _ms(p[0]) + within_ms > wm
         ] + unsettled
         state.update((retained, int(match_no)))
         if retained:
@@ -349,15 +351,16 @@ def streaming_cep_nfa_within(
 
     Same finalization/retirement argument as the regex tier above: a
     match anchored at ts0 can only bind rows with ts < ts0 + within
-    (nfa_try_match's deadline pruning), every such row is settled once
-    watermark >= ms(ts0) + within, and greedy backtracking over a
-    settled prefix is deterministic — so emission is final, matches are
-    leftmost non-overlapping (AFTER MATCH SKIP PAST LAST ROW), and
-    unconsumed settled rows outside the WITHIN horizon retire, keeping
-    state O(rows inside the horizon) per key. ``steps`` / ``defines`` /
-    ``measures`` are exactly the batch ``operators.cep.match_nfa``
-    surface; the bounded-replay result equals match_nfa restricted to
-    finalizable starts.
+    (the deadline pruning of ``operators.cep.nfa_walk``, the one NFA
+    walk match_nfa and the Pattern API run too), every such row is
+    settled once watermark >= ms(ts0) + within, and greedy
+    backtracking over a settled prefix is deterministic — so emission
+    is final, matches are leftmost non-overlapping (AFTER MATCH SKIP
+    PAST LAST ROW), and unconsumed settled rows outside the WITHIN
+    horizon retire, keeping state O(rows inside the horizon) per key.
+    ``steps`` / ``defines`` / ``measures`` are exactly the batch
+    ``operators.cep.match_nfa`` surface; the bounded-replay result
+    equals match_nfa restricted to finalizable starts.
 
     ``emit_timeouts`` is the TimedOutPartialMatchHandler surface
     (CepOperator.java's timeout path; PatternStream.select's timeout
@@ -369,15 +372,14 @@ def streaming_cep_nfa_within(
     the expired anchor row retires from state in the same batch.
     """
     from flink_release_1_16_0_spark.operators.cep import (
-        _AGGS,
+        _check_agg,
         _measure_value,
-        nfa_longest_partial,
-        nfa_try_match,
+        nfa_timed_out_partial,
+        nfa_walk,
     )
 
     for alias, (_var, agg, _col, _t) in measures.items():
-        if agg not in _AGGS:
-            raise ValueError(f"{alias}: unsupported agg {agg}")
+        _check_agg(alias, agg)
     tagged = stream.select(
         *keys,
         F.col(ts_col).alias("__ts"),
@@ -412,23 +414,10 @@ def streaming_cep_nfa_within(
     )
     slice_cols = ["__ts", "__id", *value_cols]
 
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in val_fields]
+    convs = [_make_conv(f.dataType) for f in val_fields]
 
     def col_name(c: str) -> str:
         return "__ts" if c == ts_col else "__id" if c == id_col else c
-
-    def ms(t) -> int:
-        return pd.Timestamp(t).value // 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -445,7 +434,7 @@ def streaming_cep_nfa_within(
             if len(pdf) == 0:
                 continue
             for tup in pdf[slice_cols].itertuples(index=False, name=None):
-                if ms(tup[0]) <= wm:
+                if _ms(tup[0]) <= wm:
                     continue  # late beyond the watermark: dropped
                 pending.append(
                     (
@@ -455,9 +444,9 @@ def streaming_cep_nfa_within(
                     )
                 )
         settled = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
+            (p for p in pending if _ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
         )
-        unsettled = [p for p in pending if ms(p[0]) > wm]
+        unsettled = [p for p in pending if _ms(p[0]) > wm]
         rows = [dict(zip(slice_cols, p)) for p in settled]
         pdf_all = pd.DataFrame(settled, columns=slice_cols)
         out: list[tuple] = []
@@ -477,9 +466,9 @@ def streaming_cep_nfa_within(
 
         s = consumed = 0
         while s < len(rows):
-            res = nfa_try_match(rows, s, steps, defines, within_ms)
+            res = next(nfa_walk(rows, s, steps, defines, within_ms), None)
             if res is not None and res[0] > s:
-                if ms(rows[s]["__ts"]) + within_ms <= wm:
+                if _ms(rows[s]["__ts"]) + within_ms <= wm:
                     end, bound = res
                     out.append(measure_row(bound, False))
                     match_no += 1
@@ -489,11 +478,11 @@ def streaming_cep_nfa_within(
                     # finalizable, no later start is either
                     break
             else:
-                if emit_timeouts and ms(rows[s]["__ts"]) + within_ms <= wm:
-                    # expired unmatched anchor: its greedy principal
-                    # partial times out NOW (the row retires from state
-                    # this batch, so this fires exactly once per anchor)
-                    partial = nfa_longest_partial(
+                if emit_timeouts and _ms(rows[s]["__ts"]) + within_ms <= wm:
+                    # expired unmatched anchor: its partial times out
+                    # NOW (the row retires from state this batch, so
+                    # this fires exactly once per anchor)
+                    partial = nfa_timed_out_partial(
                         rows, s, steps, defines, within_ms
                     )
                     if partial is not None:
@@ -501,7 +490,7 @@ def streaming_cep_nfa_within(
                         match_no += 1
                 s += 1
         retained = [
-            p for p in settled[consumed:] if ms(p[0]) + within_ms > wm
+            p for p in settled[consumed:] if _ms(p[0]) + within_ms > wm
         ] + unsettled
         state.update((retained, int(match_no)))
         if retained:

@@ -18,7 +18,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_release_1_16_0_spark.catalog import load_table, normalize_event_ts
+from flink_release_1_16_0_spark.catalog import normalize_event_ts
 
 _SINK_COUNTER = itertools.count()
 
@@ -62,9 +62,9 @@ def run_to_table(
     memory sink and returns the materialized table. The timeout
     defaults to 300 s, overridable with SPARK_GRAFT_STREAM_TIMEOUT —
     the sf3 density sweeps legitimately exceed 300 s on the heaviest
-    stateful replays (a timed-out drain surfaces as an EMPTY sink, a
-    false ROWS mismatch rather than a hang). The returned
-    DataFrame is a normal batch relation over the sink contents.
+    stateful replays (a timed-out drain stops the query and raises
+    TimeoutError rather than hanging). The returned DataFrame is a
+    normal batch relation over the sink contents.
     """
     import os
 
@@ -220,8 +220,3 @@ def digest_of_batch(df: DataFrame) -> dict:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical watermarked event stream (ts = event time)."""
     return replay_stream(spark, sf_dir, "events").withWatermark("ts", "10 minutes")
-
-
-def batch_dual(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The batch view of the same table (stream-table duality oracle)."""
-    return load_table(spark, sf_dir, name)

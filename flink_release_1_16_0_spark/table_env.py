@@ -5419,8 +5419,8 @@ def _translate_match_recognize(tenv: "TableEnvironment", sql: str) -> str:
                 # SQL optional is NEVER greedy in the reference
                 # (CommonExecMatch.applyQuantifier drops greedy for
                 # isOptional): both branches live, earliest completion
-                # emits — the NFA tier's ?e quantifier
-                steps.append((v, "?e"))
+                # emits — the NFA walk's ?< quantifier
+                steps.append((v, "?<"))
             elif q in ("+", "*"):
                 # SQL greedy loops are the reference's Pattern.greedy():
                 # possessive, no backtracking

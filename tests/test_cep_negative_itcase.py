@@ -13,7 +13,7 @@ reference's NFA test corpus:
 
 Each case replays the reference's event log through the real
 DataStream CEP facade (datastream/cep.py -> operators/cep.py
-nfa_all_matches) and asserts the exact match set.
+nfa_walk) and asserts the exact match set.
 """
 
 from __future__ import annotations

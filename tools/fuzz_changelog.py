@@ -50,10 +50,11 @@ import argparse
 import random
 import sys
 from collections import Counter, defaultdict
+from pathlib import Path
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
     DELETE,
