@@ -421,7 +421,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING
 @register("stream_over_event_time", _SOVER_ET_ORACLE, tags=("streaming", "over", "time"))
 def stream_over_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_rows_event_time,
+        streaming_over_event_time,
     )
 
     ev = (
@@ -430,10 +430,16 @@ def stream_over_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
     )
     return run_to_table(
-        streaming_over_rows_event_time(
+        streaming_over_event_time(
             ev, keys=["user_id"], value_col="value", id_col="event_id"
         ),
         "update",
+    ).select(
+        "user_id",
+        "event_id",
+        "ts",
+        F.col("win_n").alias("running_n"),
+        F.col("win_sum").alias("running_sum"),
     )
 
 
@@ -982,7 +988,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts
 )
 def stream_over_range_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_range_event_time,
+        streaming_over_event_time,
     )
 
     ev = (
@@ -991,12 +997,13 @@ def stream_over_range_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
     )
     return run_to_table(
-        streaming_over_range_event_time(
+        streaming_over_event_time(
             ev,
             keys=["user_id"],
             value_col="value",
             id_col="event_id",
-            bound_ms=30 * 60 * 1000,
+            frame="range",
+            preceding=30 * 60 * 1000,
         ),
         "update",
     )
@@ -1554,7 +1561,7 @@ WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
 )
 def stream_over_rows_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_rows_bounded_event_time,
+        streaming_over_event_time,
     )
 
     ev = (
@@ -1563,8 +1570,9 @@ def stream_over_rows_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
     )
     return run_to_table(
-        streaming_over_rows_bounded_event_time(
-            ev, keys=["user_id"], value_col="value", id_col="event_id"
+        streaming_over_event_time(
+            ev, keys=["user_id"], value_col="value", id_col="event_id",
+            preceding=19,
         ),
         "update",
     )
@@ -1810,29 +1818,30 @@ def stream_cep_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # tumbling window agg with ALLOWED LATENESS + late firing
 # (WindowOperator.java:380-409 — the lateness path Spark's native
-# window agg cannot express; operator in streaming/stateful.py). The
-# bounded single-file replay has no late arrivals, so the oracle
-# verifies the on-time firing set: windows whose end the final
-# watermark passed (ms-floored, the module convention); the -U/+U late
-# path is pytest-covered with a multi-batch replay
-# (tests/test_streaming.py::test_window_agg_allowed_lateness). COUNT
-# only: the operator's sequential float accumulator is not
-# cross-engine bit-stable for SUM.
+# window agg cannot express; the group-window operator in
+# streaming/group_window.py). The bounded single-file replay has no
+# late arrivals, so the oracle verifies the on-time firing set:
+# windows the final watermark fired (isWindowFired, wm >= end - 1,
+# ms-floored — the module convention); the -U/+U late path is
+# pytest-covered with a multi-batch replay
+# (tests/test_streaming.py::test_window_agg_allowed_lateness). SUM is
+# exact: the operator accumulates decimals, the oracle sums DECIMAL.
 # --------------------------------------------------------------------------
 
 _SLATENESS_ORACLE = f"""
 WITH wm AS (
   SELECT (epoch_us(MAX(ts)) // 1000) - 600000 AS wm_ms FROM events
 ), b AS (
-  SELECT (epoch_us(ts) // {5 * 60 * _US}) AS bucket FROM events
+  SELECT (epoch_us(ts) // {5 * 60 * _US}) AS bucket, value FROM events
 )
 SELECT
   make_timestamp(bucket * {5 * 60 * _US}) AS win_start,
   '+I' AS op,
-  CAST(COUNT(*) AS BIGINT) AS n
+  CAST(COUNT(*) AS BIGINT) AS n,
+  CAST(SUM(CAST(value AS DECIMAL(38,2))) AS DOUBLE) AS total
 FROM b, wm
 GROUP BY bucket, wm_ms
-HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} <= wm_ms
+HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} - 1 <= wm_ms
 """
 
 
@@ -1842,23 +1851,30 @@ HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} <= wm_ms
     tags=("streaming", "window", "time"),
 )
 def stream_window_allowed_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from pyspark.sql.types import DoubleType, LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     ev = events_stream(spark, sf_dir)
-    out = streaming_window_agg_allowed_lateness(
+    out = streaming_group_window_agg(
         ev.select("ts", "value", F.lit(0).alias("__g")),
         keys=["__g"],
         ts_col="ts",
-        window_ms=5 * 60 * 1000,
+        aggs=[
+            ("n", "count_star", None, LongType()),
+            ("total", "sum", "value", DoubleType()),
+        ],
+        kind="tumble",
+        size_ms=5 * 60 * 1000,
         allowed_lateness_ms=10 * 60 * 1000,
-        value_col="value",
     )
     return run_to_table(out, "update").select(
         F.col("window_start").alias("win_start"),
         F.col("__rowkind").alias("op"),
         "n",
+        "total",
     )
 
 

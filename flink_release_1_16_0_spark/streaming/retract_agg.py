@@ -21,7 +21,9 @@ classes:
 Emission per key per micro-batch (compacted GroupAggFunction
 protocol): +I on first non-empty state, -U(old)/+U(new) on change,
 -D when the live row count nets to zero. State per key = one
-accumulator row; one hash exchange.
+accumulator row; one hash exchange. The accumulator (`RetractAcc`) is
+shared with the group-window operator, as the reference generates one
+aggs handle per agg spec for both.
 """
 
 from __future__ import annotations
@@ -71,11 +73,21 @@ _MULTISET = (
 
 
 def _jdiv(a: int, b: int) -> int:
+    """Java integer division (truncates toward zero)."""
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
 
 
-class _Cells:
+class RetractAcc:
+    """Retractable accumulator: one cell per agg spec + net row count.
+
+    Serves this module's unbounded group agg and the group-window
+    operator (streaming/group_window.py); each operator validates its
+    own func subset. Specs are (out_name, func, col, out_type[, extra]);
+    ``weighted_avg`` takes col=(value_col, weight_col) and ``listagg``
+    reads its delimiter from spec[4] (default ',').
+    """
+
     __slots__ = ("n", "cells")
 
     def __init__(self, nspecs: int):
@@ -83,20 +95,27 @@ class _Cells:
         self.cells = [None] * nspecs
 
     def add(self, specs, row, sign: int, tup=None, col_pos=None) -> None:
+        """``row`` is a dict, or pass positional ``tup``+``col_pos``
+        (itertuples hot path — no per-row dict allocation)."""
         self.n += sign
         for i, spec in enumerate(specs):
             func, col = spec[1], spec[2]
-            if col is None:
+            if col is None or func == "count_star":
                 v = None
-            elif tup is not None:
-                v = tup[col_pos[col]]
             else:
-                v = row[col]
+                c0 = col[0] if isinstance(col, tuple) else col
+                v = tup[col_pos[c0]] if tup is not None else row[c0]
             if v is not None and isinstance(v, float) and v != v:
                 v = None
             c = self.cells[i]
             if func == "count_star":
                 self.cells[i] = (c or 0) + sign
+            elif func == "weighted_avg":
+                w = tup[col_pos[col[1]]] if tup is not None else row[col[1]]
+                if v is None or w is None:
+                    continue
+                s, ws = c if c is not None else (0, 0)
+                self.cells[i] = (s + sign * int(v) * int(w), ws + sign * int(w))
             elif v is None:
                 continue
             elif func == "count":
@@ -113,7 +132,7 @@ class _Cells:
                 if d[v] == 0:
                     del d[v]
                 self.cells[i] = d
-            else:  # listagg: ordered, retract removes FIRST occurrence
+            elif func == "listagg":  # ordered; retract removes FIRST occurrence
                 lst = c if c is not None else []
                 if sign > 0:
                     lst.append(v)
@@ -123,6 +142,46 @@ class _Cells:
                     except ValueError:
                         pass  # the reference logs and continues
                 self.cells[i] = lst
+            else:  # concat_distinct — append-only, insertion-ordered dict
+                # keys (O(1) membership vs O(d) list `not in`; mirrors the
+                # reference's MapView distinct accumulator).
+                if sign < 0:
+                    raise ValueError("concat_distinct cannot retract")
+                if c is None:
+                    self.cells[i] = {v: True}
+                else:
+                    c.setdefault(v, True)
+
+    def merge(self, specs, other: "RetractAcc") -> None:
+        """Session-merge ``other`` into self (MergingWindowSet merge)."""
+        self.n += other.n
+        for i, spec in enumerate(specs):
+            func = spec[1]
+            o = other.cells[i]
+            if o is None:
+                continue
+            c = self.cells[i]
+            if func in ("count_star", "count"):
+                self.cells[i] = (c or 0) + o
+            elif func in ("sum", "sum_int", "avg_int", "weighted_avg"):
+                if c is None:
+                    self.cells[i] = o
+                else:
+                    self.cells[i] = (c[0] + o[0], c[1] + o[1])
+            elif func in _MULTISET:
+                d = c if c is not None else {}
+                for v, k in o.items():
+                    d[v] = d.get(v, 0) + k
+                    if d[v] == 0:
+                        del d[v]
+                self.cells[i] = d
+            else:
+                # dict.update: existing keys keep position, new ones append
+                # — "self's items then other's new".
+                if c is None:
+                    self.cells[i] = dict(o)
+                else:
+                    c.update(o)
 
     def emit(self, specs) -> tuple:
         out = []
@@ -134,11 +193,13 @@ class _Cells:
             elif func == "sum":
                 if c is None or c[1] == 0:
                     out.append(None)
-                else:
+                elif isinstance(spec[3], StringType):
                     out.append(str(c[0]))
+                else:
+                    out.append(float(c[0]))
             elif func == "sum_int":
                 out.append(None if c is None or c[1] == 0 else int(c[0]))
-            elif func == "avg_int":
+            elif func in ("avg_int", "weighted_avg"):
                 out.append(None if c is None or c[1] == 0 else _jdiv(c[0], c[1]))
             elif func == "count_distinct":
                 out.append(0 if c is None else len(c))
@@ -152,9 +213,11 @@ class _Cells:
                 out.append(max(c) if c else None)
             elif func in ("min", "min_distinct"):
                 out.append(min(c) if c else None)
-            else:  # listagg — spec[4] is the delimiter (default ',')
+            elif func == "listagg":
                 delim = spec[4] if len(spec) > 4 else ","
                 out.append(delim.join(str(v) for v in c) if c else None)
+            else:  # concat_distinct
+                out.append(None if c is None else "|".join(str(v) for v in c))
         return tuple(out)
 
 
@@ -168,8 +231,8 @@ def streaming_retracting_multi_agg(
 ) -> DataFrame:
     """Unbounded retracting group agg over an append or changelog
     input. ``aggs``: (out_name, func, col, out_type[, listagg_delim]).
-    Output: __rowkind + keys + agg columns; SUM(decimal) emits its
-    exact value as a string (cast downstream).
+    Output: __rowkind + keys + agg columns; declare SUM as StringType
+    to receive its exact decimal value as a string (cast downstream).
     """
     for a in aggs:
         if a[1] not in _FUNCS:
@@ -191,7 +254,7 @@ def streaming_retracting_multi_agg(
         if state.exists:
             acc, emitted = pickle.loads(state.get[0])
         else:
-            acc, emitted = _Cells(nspecs), None
+            acc, emitted = RetractAcc(nspecs), None
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue

@@ -3,15 +3,28 @@
 These rebuild the reference's keyed-state operators that Structured
 Streaming lacks natively (SURVEY.md section 7.0 "custom (real work)"):
 
-- `streaming_dedup_keep_last` — keep the latest row per key across
-  micro-batches (ProcTimeDeduplicateKeepLastRowFunction, reused by
-  StreamExecChangelogNormalize.java:156). State: the current winner row.
-- `streaming_topn` — per-key top-N by a sort column, maintained across
-  batches (AbstractTopNFunction.java / AppendOnlyTopNFunction). State:
-  the current top-N heap, re-emitted per batch.
-- `streaming_retracting_agg` — unbounded group agg that emits the
-  -U/+U changelog on every change (GroupAggFunction.java:125-172).
-  State: the accumulators (count, sum).
+- dedup: `streaming_dedup_keep_last` (keep last or first:
+  ProcTimeDeduplicateKeepLastRowFunction, RowTimeDeduplicateFunction)
+  and `streaming_window_dedup` (RowTimeWindowDeduplicate);
+- top-N: `streaming_topn` (AppendOnlyTopNFunction) and
+  `streaming_retractable_topn` (RetractableTopNFunction);
+- group aggs: `streaming_retracting_agg` (GroupAggFunction's -U/+U
+  changelog), `streaming_distinct_count` (distinct state view) and
+  `streaming_retracting_minmax` (Min/MaxWithRetractAggFunction);
+- two-input joins over one tagged union (`union_sides`):
+  `streaming_changelog_join` (StreamingJoinOperator, inner/outer),
+  `streaming_changelog_semi_anti_join`, `streaming_anti_join`
+  (time-bounded anti), `streaming_temporal_join` and
+  `streaming_temporal_join_event_time`
+  (TemporalRowTimeJoinOperator);
+- event time: `streaming_temporal_sort` (RowTimeSortOperator) and
+  `streaming_over_event_time` (every rowtime ROWS/RANGE OVER frame);
+  proc time: `streaming_over_rows_unbounded`;
+- changelog: `streaming_upsert_to_retract` (ChangelogNormalize).
+
+Window aggregates live beside this module: window_tvf (slicing
+assigners), group_window (session/sliding/allowed lateness) and
+retract_agg (spec-driven retracting group agg).
 
 Design notes for scale: state lives in Spark's checkpointed state store
 partitioned by the grouping key (same layout as Flink's keyed RocksDB
@@ -47,6 +60,46 @@ def _schema_with_rowkind(schema: StructType) -> StructType:
     from pyspark.sql.types import StringType, StructField
 
     return StructType([StructField(ROWKIND, StringType()), *schema.fields])
+
+
+def union_sides(
+    first: DataFrame,
+    second: DataFrame,
+    heads: tuple[Sequence, Sequence],
+    pays: tuple[Sequence[str], Sequence[str]],
+    tags: tuple = ("L", "R"),
+) -> DataFrame:
+    """One keyed stream for a two-input operator: each side selects its
+    head columns (keys, time, ...), a literal ``__side`` tag, its own
+    payload and typed NULLs for the other side's payload; the two are
+    unioned by name, so one applyInPandasWithState sees both inputs."""
+    from pyspark.sql import functions as F
+
+    def side(df, head, tag, own, other, other_df):
+        return df.select(
+            *head,
+            F.lit(tag).alias("__side"),
+            *own,
+            *[F.lit(None).cast(other_df.schema[c].dataType).alias(c) for c in other],
+        )
+
+    return side(first, heads[0], tags[0], pays[0], pays[1], second).unionByName(
+        side(second, heads[1], tags[1], pays[1], pays[0], first)
+    )
+
+
+def _state_conv(dt):
+    """Sanitizer for one payload column on its way into state: the
+    padded union makes pandas upcast NULL-bearing numeric columns to
+    float64 — state (and NaN) needs the declared type back."""
+    name = dt.typeName()
+    if name in ("long", "integer", "short", "byte"):
+        return lambda v: None if pd.isna(v) else int(v)
+    if name in ("double", "float"):
+        return lambda v: None if pd.isna(v) else float(v)
+    if name.startswith("timestamp"):
+        return lambda v: None if pd.isna(v) else pd.Timestamp(v)
+    return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
 
 
 def streaming_dedup_keep_last(
@@ -587,22 +640,8 @@ def streaming_changelog_join(
     if set(lpay) & set(rpay):
         raise ValueError(f"payload columns must be disjoint: {set(lpay) & set(rpay)}")
 
-    def pad(df: DataFrame, side: str, own, other, other_schema) -> DataFrame:
-        return df.select(
-            *keys,
-            F.col(seq_col).cast("long").alias(seq_col),
-            ROWKIND,
-            F.lit(side).alias("__side"),
-            *own,
-            *[
-                F.lit(None).cast(other_schema[c].dataType).alias(c)
-                for c in other
-            ],
-        )
-
-    unioned = pad(left, "L", lpay, rpay, right.schema).unionByName(
-        pad(right, "R", rpay, lpay, left.schema)
-    )
+    head = [*keys, F.col(seq_col).cast("long").alias(seq_col), ROWKIND]
+    unioned = union_sides(left, right, (head, head), (lpay, rpay))
 
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
@@ -790,22 +829,8 @@ def streaming_changelog_semi_anti_join(
     lpay = [c for c in left.columns if c not in meta]
     rpay = [c for c in right.columns if c not in meta]
 
-    def pad(df: DataFrame, side: str, own, other, other_schema) -> DataFrame:
-        return df.select(
-            *keys,
-            F.col(seq_col).cast("long").alias(seq_col),
-            ROWKIND,
-            F.lit(side).alias("__side"),
-            *own,
-            *[
-                F.lit(None).cast(other_schema[c].dataType).alias(c)
-                for c in other
-            ],
-        )
-
-    unioned = pad(left, "L", lpay, rpay, right.schema).unionByName(
-        pad(right, "R", rpay, lpay, left.schema)
-    )
+    head = [*keys, F.col(seq_col).cast("long").alias(seq_col), ROWKIND]
+    unioned = union_sides(left, right, (head, head), (lpay, rpay))
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
     out_schema = ST(
@@ -943,21 +968,12 @@ def streaming_temporal_join(
     if set(lpay) & set(rpay):
         raise ValueError(f"payload columns must be disjoint: {set(lpay) & set(rpay)}")
 
-    def pad(df, side, ts_col, own, other, other_schema):
-        return df.select(
-            *keys,
-            F.col(ts_col).cast("timestamp").alias("__t"),
-            F.lit(side).alias("__side"),
-            *own,
-            *[
-                F.lit(None).cast(other_schema[c].dataType).alias(c)
-                for c in other
-            ],
-        )
+    def head(ts_col):
+        return [*keys, F.col(ts_col).cast("timestamp").alias("__t")]
 
     # side 0 = right/version rows sort first at equal ts
-    unioned = pad(right, 0, right_ts, rpay, lpay, left.schema).unionByName(
-        pad(left, 1, left_ts, lpay, rpay, right.schema)
+    unioned = union_sides(
+        right, left, (head(right_ts), head(left_ts)), (rpay, lpay), tags=(0, 1)
     )
 
     key_fields = [left.schema[k] for k in keys]
@@ -1066,28 +1082,22 @@ def streaming_temporal_join_event_time(
         # version timeline (StreamExecDropUpdateBefore.java)
         right = right.filter(F.col(ROWKIND) != UPDATE_BEFORE)
 
-    def pad(df, side, ts_col, own, other, other_schema):
-        kind = (
-            F.col(ROWKIND) if ROWKIND in df.columns else F.lit(INSERT)
-        ).alias("__kind")
-        return df.select(
+    def head(df, ts_col):
+        kind = F.col(ROWKIND) if ROWKIND in df.columns else F.lit(INSERT)
+        return [
             *keys,
             F.col(ts_col).cast("timestamp").alias("__t"),
-            F.lit(side).alias("__side"),
-            kind,
-            *own,
-            *[
-                F.lit(None).cast(other_schema[c].dataType).alias(c)
-                for c in other
-            ],
-        )
+            kind.alias("__kind"),
+        ]
 
     # side 0 = right/version rows sort first at equal ts
-    unioned = (
-        pad(right, 0, right_ts, rpay, lpay, left.schema)
-        .unionByName(pad(left, 1, left_ts, lpay, rpay, right.schema))
-        .withWatermark("__t", delay)
-    )
+    unioned = union_sides(
+        right,
+        left,
+        (head(right, right_ts), head(left, left_ts)),
+        (rpay, lpay),
+        tags=(0, 1),
+    ).withWatermark("__t", delay)
 
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
@@ -1122,20 +1132,7 @@ def streaming_temporal_join_event_time(
     out_cols = [*keys, *lpay, *rpay, asof_ts, *([ROWKIND] if changelog else [])]
     nl, nr = len(lpay), len(rpay)
 
-    # per-payload-column sanitizers: the padded union makes pandas
-    # upcast NULL-bearing numeric columns to float64 — state (and NaN)
-    # needs the declared types back
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in (*l_fields, *r_fields)]
+    convs = [_state_conv(f.dataType) for f in (*l_fields, *r_fields)]
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -1311,33 +1308,49 @@ def streaming_temporal_sort(
     return res
 
 
-def streaming_over_rows_event_time(
+def streaming_over_event_time(
     stream: DataFrame,
     keys: Sequence[str],
     value_col: str,
     id_col: str,
     ts_col: str = "ts",
+    frame: str = "rows",
+    preceding: int | None = None,
 ) -> DataFrame:
-    """Watermark-buffered rowtime OVER aggregation — the event-time
-    variant of streaming_over_rows_unbounded
-    (RowTimeRowsUnboundedPrecedingFunction.java: buffer rows per key,
-    sort by event time, fire on watermark advance, drop late rows).
+    """Watermark-buffered rowtime OVER aggregation: COUNT(*) and SUM
+    over each row's frame, one operator for the reference's
+    RowTimeRowsUnboundedPrecedingFunction (``frame="rows"``,
+    ``preceding=None``), RowTimeRowsBoundedPrecedingFunction
+    (``"rows"``, ``preceding=n``: the n previous rows plus itself, in
+    strict (ts, id) order), RowTimeRangeUnboundedPrecedingFunction
+    (``"range"``, None) and RowTimeRangeBoundedPrecedingFunction
+    (``"range"``, ``preceding=b`` ms: rows with event time in
+    [ts - b, ts]). Under RANGE, peers (equal ts) share one frame that
+    includes all of them; under ROWS every row has its own frame.
 
-    Unlike the proc-time variant, arrival order across micro-batches is
-    free: rows buffer in keyed state until the watermark passes their
-    timestamp, then finalize in exact (ts, id) order with the running
-    aggregate carried over the finalized prefix. Rows at or before the
-    watermark on arrival are late and dropped (allowed lateness 0, the
-    reference's default). Rows the final watermark never passes (the
-    last delay-window of a bounded replay) stay buffered — faithful
-    watermark semantics, mirrored by the oracle's max(ts)-delay cutoff.
+    Arrival order across micro-batches is free: rows buffer in keyed
+    state until the watermark reaches their timestamp, then finalize in
+    exact (ts, id) order. Rows strictly before the watermark on arrival
+    are late and dropped (allowed lateness 0, the reference's default).
+    Rows the final watermark never passes (the last delay-window of a
+    bounded replay) stay buffered — mirrored by the oracle's
+    max(ts)-delay cutoff. The input MUST carry ``withWatermark(ts_col,
+    delay)``; event-time timeouts schedule the flush batches that drain
+    the buffer after the last data batch.
 
-    The input MUST carry ``withWatermark(ts_col, delay)``; event-time
-    timeouts schedule the flush batches that drain the buffer after the
-    last data batch. State per key = pending buffer + two counters, the
-    exact layout of the reference's per-key MapState<ts, rows> + fired
-    offset.
+    A NULL value counts in ``win_n`` (COUNT(*)) but not in the sum; a
+    frame without a non-NULL value emits a NULL ``win_sum``. Sums run
+    in integer cents (the fixture's 2-decimal grid), so they are exact
+    and batch-split-invariant.
+
+    State per key: the pending buffer, the finalized rows a future
+    frame can still reach, and the frame's carried (count, non-NULL
+    count, cents). A bounded frame keeps O(n rows) or O(rows per b ms)
+    rows, retiring the rest; an unbounded frame keeps no rows at all.
+    Output: keys, id, ts, ``win_n``, ``win_sum``.
     """
+    from collections import deque
+
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -1346,6 +1359,8 @@ def streaming_over_rows_event_time(
         StructType as ST,
     )
 
+    if frame not in ("rows", "range"):
+        raise ValueError(f"frame must be rows|range, got {frame!r}")
     key_fields = [stream.schema[k] for k in keys]
     id_field = stream.schema[id_col]
     ts_field = stream.schema[ts_col]
@@ -1354,62 +1369,96 @@ def streaming_over_rows_event_time(
             *key_fields,
             id_field,
             ts_field,
-            StructField("running_n", LongType()),
-            StructField("running_sum", DoubleType()),
+            StructField("win_n", LongType()),
+            StructField("win_sum", DoubleType()),
         ]
     )
-    pend_schema = ST(
-        [ts_field, id_field, StructField("v", DoubleType())]
-    )
+    row_schema = ST([ts_field, id_field, StructField("cents", LongType())])
     state_schema = ST(
         [
-            StructField("pending", ArrayType(pend_schema)),
+            StructField("pending", ArrayType(row_schema)),
+            StructField("frame", ArrayType(row_schema)),
             StructField("n", LongType()),
+            StructField("nn", LongType()),
             StructField("cents", LongType()),
         ]
     )
+    out_cols = [*keys, id_col, ts_col, "win_n", "win_sum"]
+    by_rows = frame == "rows"
+
+    def ms(t) -> int:
+        return t.value // 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            # state round-trips timestamps as datetime, fresh batches as
-            # pandas Timestamp — normalize (naive == session tz == UTC)
-            return pd.Timestamp(t).value // 1_000_000
-
         wm = state.getCurrentWatermarkMs()
         if state.exists:
-            pending, n0, cents0 = state.get
+            # state round-trips timestamps as datetime, fresh batches as
+            # pandas Timestamp — normalize (naive == session tz == UTC)
+            pending, kept, n, nn, cents = state.get
             pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
+            kept = deque((pd.Timestamp(p[0]), p[1], p[2]) for p in (kept or []))
         else:
-            pending, n0, cents0 = [], 0, 0
+            pending, kept, n, nn, cents = [], deque(), 0, 0, 0
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
             for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
+                t = pd.Timestamp(t)
                 if ms(t) < wm:
                     continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm),
-            key=lambda p: (p[0], p[1]),
-        )
+                pending.append((t, int(i), None if pd.isna(v) else int(round(v * 100))))
+        ready = sorted((p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0], p[1]))
         pending = [p for p in pending if ms(p[0]) > wm]
+
+        def evict(max_rows: int, lo_ms: int) -> None:
+            # drop finalized rows that left the frame: beyond the last
+            # ``max_rows`` (ROWS) or before ``lo_ms`` (RANGE)
+            nonlocal n, nn, cents
+            while kept and (
+                len(kept) > max_rows if by_rows else ms(kept[0][0]) < lo_ms
+            ):
+                _t, _i, c = kept.popleft()
+                n -= 1
+                if c is not None:
+                    nn -= 1
+                    cents -= c
         out = []
-        n, cents = n0, cents0
-        for t, i, v in ready:
-            n += 1
-            cents += int(round(v * 100))
-            out.append((*key, i, t, n, cents / 100.0))
-        state.update((pending, n, cents))
+        j = 0
+        while j < len(ready):
+            t = ready[j][0]
+            k = j + 1
+            if not by_rows:  # RANGE: the peer group shares one frame
+                while k < len(ready) and ready[k][0] == t:
+                    k += 1
+            group = ready[j:k]
+            j = k
+            for row in group:
+                n += 1
+                if row[2] is not None:
+                    nn += 1
+                    cents += row[2]
+                if preceding is not None:
+                    kept.append(row)
+            if preceding is not None:
+                evict(preceding + 1, ms(t) - preceding)
+            total = cents / 100.0 if nn else None
+            for _t, i, _c in group:
+                out.append((*key, i, t, n, total))
+        if preceding is not None:
+            # retain only rows a future frame can reach: the last n
+            # (ROWS), or those inside the bound of the watermark (RANGE:
+            # future rows have ts > wm, so their frames start after
+            # wm - b)
+            evict(preceding, wm - preceding)
+        state.update((pending, list(kept), n, nn, cents))
         if pending:
             # fire a flush batch once the watermark passes the earliest
             # still-buffered row
             state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
         if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "running_n", "running_sum"]
-            )
+            yield pd.DataFrame(out, columns=out_cols)
 
     return stream.groupBy(*keys).applyInPandasWithState(
         fn,
@@ -1432,10 +1481,12 @@ def streaming_over_rows_unbounded(
     RowTimeRowsUnboundedPrecedingFunction — SURVEY.md section 2.5).
 
     Spark has no streaming window functions; this is the keyed-state
-    rebuild: state carries (n, cents) forward, each batch is sorted by
-    the event-time order columns and emitted with cumulative values.
-    Sums run in integer cents (the fixture's 2-decimal grid) so results
-    are exact and batch-split-invariant.
+    rebuild: state carries (n, non-NULL count, cents) forward, each
+    batch is sorted by the event-time order columns and emitted with
+    cumulative values. Sums run in integer cents (the fixture's
+    2-decimal grid) so results are exact and batch-split-invariant. A
+    NULL value counts in ``running_n`` but not in the sum, which stays
+    NULL until the key's first non-NULL value.
     """
     from pyspark.sql.types import (
         DoubleType,
@@ -1455,7 +1506,11 @@ def streaming_over_rows_unbounded(
         ]
     )
     state_schema = ST(
-        [StructField("n", LongType()), StructField("cents", LongType())]
+        [
+            StructField("n", LongType()),
+            StructField("nn", LongType()),
+            StructField("cents", LongType()),
+        ]
     )
 
     def fn(
@@ -1467,18 +1522,20 @@ def streaming_over_rows_unbounded(
         pdf = pd.concat(batches, ignore_index=True).sort_values(
             list(order_cols), kind="mergesort"
         )
-        n0, cents0 = state.get if state.exists else (0, 0)
-        cents = (pdf[value_col] * 100).round().astype("int64").cumsum() + cents0
+        n0, nn0, cents0 = state.get if state.exists else (0, 0, 0)
+        each = (pdf[value_col].astype("float64") * 100).round()
+        nn = each.notna().cumsum() + nn0
+        cents = each.fillna(0).astype("int64").cumsum() + cents0
         running_n = pd.RangeIndex(1, len(pdf) + 1) + n0
         out = pd.DataFrame(
             {
                 **{k: pdf[k] for k in keys},
                 id_col: pdf[id_col],
                 "running_n": list(running_n),
-                "running_sum": (cents / 100.0).astype("float64"),
+                "running_sum": (cents / 100.0).where(nn > 0),
             }
         )
-        state.update((int(running_n[-1]), int(cents.iloc[-1])))
+        state.update((int(running_n[-1]), int(nn.iloc[-1]), int(cents.iloc[-1])))
         yield out
 
     return stream.groupBy(*keys).applyInPandasWithState(
@@ -1487,116 +1544,6 @@ def streaming_over_rows_unbounded(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_over_range_event_time(
-    stream: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    id_col: str,
-    ts_col: str = "ts",
-    bound_ms: int = 600_000,
-) -> DataFrame:
-    """Rowtime RANGE-bounded-preceding OVER aggregation
-    (RowTimeRangeBoundedPrecedingFunction.java): for each row, SUM/COUNT
-    over the key's rows with event time in [ts - bound, ts]. RANGE
-    semantics: peer rows (equal ts) share one frame, so every peer sees
-    the aggregate including all peers.
-
-    Same watermark discipline as streaming_over_rows_event_time: rows
-    buffer until the watermark passes them, finalize in (ts, id) order,
-    late rows drop. State additionally retains the finalized rows still
-    inside the bound window of the watermark (the reference's cleanup:
-    a retired row can never re-enter a future frame because future rows
-    only have later timestamps); everything older is evicted — state is
-    O(rows per bound window), not O(stream).
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    id_field = stream.schema[id_col]
-    ts_field = stream.schema[ts_col]
-    out_schema = ST(
-        [
-            *key_fields,
-            id_field,
-            ts_field,
-            StructField("win_n", LongType()),
-            StructField("win_sum", DoubleType()),
-        ]
-    )
-    row_schema = ST([ts_field, id_field, StructField("v", DoubleType())])
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(row_schema)),
-            StructField("window", ArrayType(row_schema)),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            pending, window = state.get
-            pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
-            window = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (window or [])]
-        else:
-            pending, window = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                if ms(t) < wm:
-                    continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
-        out = []
-        j = 0
-        while j < len(ready):
-            # peer group: all ready rows with this exact timestamp
-            t = ready[j][0]
-            peers = []
-            while j < len(ready) and ready[j][0] == t:
-                peers.append(ready[j])
-                j += 1
-            window.extend(peers)
-            lo = ms(t) - bound_ms
-            window = [w for w in window if ms(w[0]) >= lo]
-            n = len(window)
-            cents = sum(int(round(w[2] * 100)) for w in window)
-            for _t, i, _v in peers:
-                out.append((*key, i, t, n, cents / 100.0))
-        # retire rows that can never re-enter a frame: future finalized
-        # rows have ts > wm, so their frames start after wm - bound
-        window = [w for w in window if ms(w[0]) >= wm - bound_ms]
-        state.update((pending, window))
-        if pending:
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "win_n", "win_sum"]
-            )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1719,102 +1666,6 @@ def streaming_retracting_minmax(
     )
 
 
-def streaming_over_rows_bounded_event_time(
-    stream: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    id_col: str,
-    ts_col: str = "ts",
-    n_rows: int = 20,
-) -> DataFrame:
-    """Rowtime ROWS-bounded-preceding OVER aggregation
-    (RowTimeRowsBoundedPrecedingFunction.java): for each row, SUM/COUNT
-    over the key's previous ``n_rows - 1`` rows plus itself, in strict
-    (ts, id) event-time order. Unlike the RANGE variant, every row has
-    its OWN frame (no peer sharing).
-
-    Watermark discipline as the sibling operators: rows buffer until
-    the watermark passes, finalize in order, late rows drop. Retained
-    state is exactly the last ``n_rows - 1`` finalized rows per key
-    plus the unsettled buffer — the reference's retract-list bound,
-    O(n_rows + out-of-orderness window), never O(stream).
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    id_field = stream.schema[id_col]
-    ts_field = stream.schema[ts_col]
-    out_schema = ST(
-        [
-            *key_fields,
-            id_field,
-            ts_field,
-            StructField("win_n", LongType()),
-            StructField("win_sum", DoubleType()),
-        ]
-    )
-    row_schema = ST([ts_field, id_field, StructField("v", DoubleType())])
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(row_schema)),
-            StructField("window", ArrayType(row_schema)),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            pending, window = state.get
-            pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
-            window = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (window or [])]
-        else:
-            pending, window = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                if ms(t) < wm:
-                    continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
-        out = []
-        for t, i, v in ready:
-            window.append((t, i, v))
-            window = window[-n_rows:]
-            cents = sum(int(round(w[2] * 100)) for w in window)
-            out.append((*key, i, t, len(window), cents / 100.0))
-        window = window[-(n_rows - 1):] if n_rows > 1 else []
-        state.update((pending, window))
-        if pending:
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "win_n", "win_sum"]
-            )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def streaming_anti_join(
     left: DataFrame,
     right: DataFrame,
@@ -1858,21 +1709,12 @@ def streaming_anti_join(
 
     lpay = [c for c in left.columns if c not in (*keys, l_ts_col)]
 
-    unioned = left.select(
-        *keys,
-        F.col(l_ts_col).alias("__t"),
-        F.lit(0).alias("__side"),
-        *lpay,
-    ).unionByName(
-        right.select(
-            *keys,
-            F.col(r_ts_col).alias("__t"),
-            F.lit(1).alias("__side"),
-            *[
-                F.lit(None).cast(left.schema[c].dataType).alias(c)
-                for c in lpay
-            ],
-        )
+    unioned = union_sides(
+        left,
+        right,
+        ([*keys, F.col(l_ts_col).alias("__t")], [*keys, F.col(r_ts_col).alias("__t")]),
+        (lpay, []),
+        tags=(0, 1),
     )
 
     key_fields = [left.schema[k] for k in keys]
@@ -1893,17 +1735,7 @@ def streaming_anti_join(
         ]
     )
 
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in pay_fields]
+    convs = [_state_conv(f.dataType) for f in pay_fields]
     lower_td = pd.Timedelta(milliseconds=lower_ms)
     upper_td = pd.Timedelta(milliseconds=upper_ms)
 
@@ -1969,164 +1801,6 @@ def streaming_anti_join(
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_window_agg_allowed_lateness(
-    stream: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    window_ms: int,
-    allowed_lateness_ms: int,
-    value_col: str,
-    slide_ms: int | None = None,
-) -> DataFrame:
-    """Tumbling (or, with ``slide_ms``, hopping) window COUNT/SUM with
-    allowed lateness + late firing —
-    the reference's WindowOperator.java lateness path (allowedLateness
-    + isElementLate/sideOutput at WindowOperator.java:380-409, late
-    firing per late element) that Spark's native window agg cannot
-    express (Structured Streaming drops state the moment the watermark
-    passes the window, so a late-but-allowed row is lost).
-
-    Per (key, window): accumulate; when the watermark passes window_end
-    emit ``+I`` once; a row arriving while ``window_end <= wm <
-    window_end + lateness`` re-accumulates and re-fires as a ``-U/+U``
-    pair (the changelog the reference's legacy group-window produces
-    under late firing); rows beyond the lateness horizon are dropped
-    (the reference side-outputs them); state retires at ``window_end +
-    lateness`` — so state per key is O(windows inside the lateness
-    horizon), the same bound as the reference.
-
-    One hash exchange on the grouping key; window assignment is
-    row-local arithmetic. The watermark visible to a batch is the
-    previous batch's (the module's settlement convention), so firing is
-    deterministic under replay.
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        TimestampType,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    out_schema = ST(
-        [
-            StructField(ROWKIND, StringType()),
-            *key_fields,
-            StructField("window_start", TimestampType()),
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = ST(
-        [
-            StructField("starts", ArrayType(LongType())),
-            StructField("ns", ArrayType(LongType())),
-            StructField("totals", ArrayType(DoubleType())),
-            StructField("fired_ns", ArrayType(LongType())),  # -1 = unfired
-            StructField("fired_totals", ArrayType(DoubleType())),
-        ]
-    )
-    out_cols = [ROWKIND, *keys, "window_start", "n", "total"]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        wins: dict[int, list] = {}
-        if state.exists:
-            starts, ns, totals, f_ns, f_ts = state.get
-            for i, w in enumerate(starts or []):
-                wins[int(w)] = [
-                    int(ns[i]),
-                    float(totals[i]),
-                    None if f_ns[i] < 0 else int(f_ns[i]),
-                    None if f_ns[i] < 0 else float(f_ts[i]),
-                ]
-        out: list[tuple] = []
-        # 1) fire windows that became ready on the watermark BEFORE
-        # touching this batch's rows — the timer fires first in the
-        # reference, so a late row landing in the same micro-batch is
-        # observed as a separate late firing, not folded into the +I
-        for w in sorted(wins):
-            n, total, fn_, _ft = wins[w]
-            if fn_ is None and wm >= w + window_ms and n > 0:
-                out.append((INSERT, *key, pd.Timestamp(w * 1_000_000), n, total))
-                wins[w][2:] = [n, total]
-        # 2) accumulate this batch (rows for already-fired windows are
-        # the late-but-allowed case; beyond the horizon they drop, the
-        # reference's sideOutput at WindowOperator.java:405)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, v in pdf[[ts_col, value_col]].itertuples(index=False, name=None):
-                ts_ms = pd.Timestamp(t).value // 1_000_000
-                if slide_ms is None:
-                    assigned = [(ts_ms // window_ms) * window_ms]
-                else:
-                    # hop assignment (SliceAssigners.Hopping): every
-                    # slide-aligned start w with w <= ts < w + size
-                    first = ((ts_ms - window_ms) // slide_ms + 1) * slide_ms
-                    last = (ts_ms // slide_ms) * slide_ms
-                    assigned = list(range(first, last + 1, slide_ms))
-                for w in assigned:
-                    if wm >= w + window_ms + allowed_lateness_ms:
-                        continue  # beyond the lateness horizon: dropped
-                    acc = wins.setdefault(w, [0, 0.0, None, None])
-                    acc[0] += 1
-                    acc[1] += float(v)
-        # 3) late firings + retirement
-        retired: list[int] = []
-        for w in sorted(wins):
-            n, total, fn_, ft_ = wins[w]
-            w_end = w + window_ms
-            if wm >= w_end and n > 0:
-                ws = pd.Timestamp(w * 1_000_000)
-                if fn_ is None:  # first firing was itself late
-                    out.append((INSERT, *key, ws, n, total))
-                    wins[w][2:] = [n, total]
-                elif (n, total) != (fn_, ft_):
-                    out.append((UPDATE_BEFORE, *key, ws, fn_, ft_))
-                    out.append((UPDATE_AFTER, *key, ws, n, total))
-                    wins[w][2:] = [n, total]
-            if wm >= w_end + allowed_lateness_ms:
-                retired.append(w)
-        for w in retired:
-            del wins[w]
-        if wins:
-            starts = sorted(wins)
-            state.update(
-                (
-                    starts,
-                    [wins[w][0] for w in starts],
-                    [wins[w][1] for w in starts],
-                    [-1 if wins[w][2] is None else wins[w][2] for w in starts],
-                    [-1.0 if wins[w][3] is None else wins[w][3] for w in starts],
-                )
-            )
-            # next event-time action: earliest unfired end, earliest
-            # retirement — whichever comes first after the current wm
-            bounds = [
-                w + window_ms for w in starts if wins[w][2] is None
-            ] + [w + window_ms + allowed_lateness_ms for w in starts]
-            nxt = min(b for b in bounds if b > wm)
-            state.setTimeoutTimestamp(nxt)
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 

@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_release_1_16_0_spark.streaming.stateful import union_sides
+
 _AGG_FUNCS = (
     "count_star",
     "count",
@@ -136,6 +138,10 @@ class _Assigner:
 
 class _Acc:
     """One slice's accumulator: row count + one cell per agg spec."""
+
+    # Kept apart from retract_agg.RetractAcc: slices are append-only, so
+    # MIN/MAX stay scalars instead of value->count multisets on the hot
+    # hop path.
 
     __slots__ = ("n", "cells")
 
@@ -476,8 +482,6 @@ def streaming_window_tvf_join(
     if not input_attributed:
         asg = _Assigner(kind, size_ms, slide_ms, step_ms, offset_ms)
 
-    from pyspark.sql import functions as F
-
     win_meta = ("window_start", "window_end", "window_time")
     meta = (ts_col, *keys, *win_meta, "__side")
     lpay = [c for c in left.columns if c not in meta]
@@ -485,19 +489,9 @@ def streaming_window_tvf_join(
     if set(lpay) & set(rpay):
         raise ValueError(f"payload columns must be disjoint: {set(lpay) & set(rpay)}")
 
-    def tag(df: DataFrame, side: str, own, other, other_schema) -> DataFrame:
-        carry = [ts_col] if not input_attributed else ["window_start", "window_end"]
-        return df.select(
-            *keys,
-            *carry,
-            F.lit(side).alias("__side"),
-            *own,
-            *[F.lit(None).cast(other_schema[c].dataType).alias(c) for c in other],
-        )
-
-    unioned = tag(left, "L", lpay, rpay, right.schema).unionByName(
-        tag(right, "R", rpay, lpay, left.schema)
-    )
+    carry = [ts_col] if not input_attributed else ["window_start", "window_end"]
+    head = [*keys, *carry]
+    unioned = union_sides(left, right, (head, head), (lpay, rpay))
 
     key_fields = [left.schema[k] for k in keys]
     win_fields = [

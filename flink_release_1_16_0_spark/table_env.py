@@ -3192,12 +3192,12 @@ class TableEnvironment:
         return rewrite_window_tvfs(sql)
 
     def _maybe_lateness_window_agg(self, query: str) -> DataFrame | None:
-        """Dispatch a streaming tumble-window agg to the allowed-
-        lateness operator when ``table.exec.emit.allow-lateness`` (+
-        late-fire) is configured — the reference's WindowEmitStrategy
-        lateness path, which Spark's native window agg cannot serve
-        (state drops at the watermark, so late-but-allowed rows are
-        lost).
+        """Dispatch a streaming tumble/hop-window agg to the group-window
+        operator with allowed lateness when
+        ``table.exec.emit.allow-lateness`` (+ late-fire) is configured —
+        the reference's WindowEmitStrategy lateness path, which Spark's
+        native window agg cannot serve (state drops at the watermark,
+        so late-but-allowed rows are lost).
 
         Covered shape: ``SELECT window_start [AS a] [, <keys>]
         [, COUNT(*) AS n] [, SUM(col) AS t] FROM TABLE(TUMBLE(TABLE
@@ -3264,8 +3264,8 @@ class TableEnvironment:
             alias = am.group(5)
             if am.group(1):  # window_start
                 out_exprs.append(("window_start", alias or "window_start"))
-            elif am.group(2):  # window_end = start + size, computed below
-                out_exprs.append(("__window_end", alias or "window_end"))
+            elif am.group(2):  # window_end
+                out_exprs.append(("window_end", alias or "window_end"))
             elif am.group(3):  # SUM(col)
                 sum_col = am.group(3)
                 out_exprs.append(("total", alias or f"sum_{sum_col}"))
@@ -3323,36 +3323,32 @@ class TableEnvironment:
             "day": 86_400_000,
             "days": 86_400_000,
         }[lm.group(2).lower()]
+        from pyspark.sql.types import DoubleType, LongType
+
         from flink_release_1_16_0_spark.streaming.changelog import ROWKIND
-        from flink_release_1_16_0_spark.streaming.stateful import (
-            streaming_window_agg_allowed_lateness,
+        from flink_release_1_16_0_spark.streaming.group_window import (
+            streaming_group_window_agg,
         )
 
         stream = self.spark.table(src)
-        if sum_col is None:
-            stream = stream.withColumn("__zero", F.lit(0.0))
         if not keys:  # global window: one synthetic key group
             stream = stream.withColumn("__g", F.lit(0))
             keys = ["__g"]
-        out = streaming_window_agg_allowed_lateness(
+        aggs = [("n", "count_star", None, LongType())]
+        if sum_col is not None:
+            aggs.append(("total", "sum", sum_col, DoubleType()))
+        out = streaming_group_window_agg(
             stream,
             keys=keys,
             ts_col=ts_col,
-            window_ms=window_ms,
-            allowed_lateness_ms=lateness_ms,
-            value_col=sum_col or "__zero",
+            aggs=aggs,
+            kind="tumble" if slide_ms is None else "sliding",
+            size_ms=window_ms,
             slide_ms=slide_ms,
+            allowed_lateness_ms=lateness_ms,
         )
         # ONLY_UPDATE_AFTER toward the sink: drop the -U half
         out = out.filter(F.col(ROWKIND) != "-U")
-        if any(c == "__window_end" for c, _a in out_exprs):
-            out = out.withColumn(
-                "__window_end",
-                # millisecond granularity: a fractional TVF size like
-                # INTERVAL '0.5' SECOND must not truncate to 0
-                F.col("window_start")
-                + F.expr(f"INTERVAL {window_ms} MILLISECOND"),
-            )
         return out.select(
             *[F.col(c).alias(a) for c, a in out_exprs]
         )

@@ -23,11 +23,7 @@ Operator under test: streaming_retracting_multi_agg
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import (  # noqa: E402
     LongType,

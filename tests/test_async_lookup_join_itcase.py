@@ -25,11 +25,7 @@ original (operators/async_lookup.py, real mapInPandas execution)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -16,11 +16,7 @@ the NullTable3 derivation (Apache-2.0). Execution: native Spark SQL
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402  (= tupleData5)
 

@@ -21,11 +21,7 @@ Catalyst picks its own here (native batch joins, SURVEY.md section
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
 

@@ -11,11 +11,7 @@ native Catalyst window aggregation (SURVEY.md section 2.5 row 37)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
 

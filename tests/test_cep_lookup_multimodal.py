@@ -4,12 +4,9 @@ and the streaming over-agg operator across micro-batches."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.operators.cep import (  # noqa: E402
     classify,

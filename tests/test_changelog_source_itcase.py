@@ -27,14 +27,11 @@ streaming_changelog_join, streaming/retract_agg.py."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 from decimal import Decimal
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import LongType, StringType  # noqa: E402
 

@@ -33,12 +33,8 @@ Adaptations, each deliberate:
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.fuzz_changelog import (  # noqa: E402
     FakeGroupState,

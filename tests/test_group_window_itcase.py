@@ -39,12 +39,9 @@ the implementation is original.
 
 from __future__ import annotations
 
-import sys
 from decimal import Decimal
 
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import (  # noqa: E402
     DoubleType,

@@ -7,12 +7,8 @@ JDBC-backed lookup join (JdbcRowDataLookupFunction.java:54).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.operators.lookup import lookup_join  # noqa: E402
 from flink_release_1_16_0_spark.sources.jdbc import (  # noqa: E402

@@ -17,13 +17,10 @@ them. Folds follow TestingRetractSink: Counter += m on +I, -= m on -D.
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.fuzz_changelog import (  # noqa: E402
     FakeGroupState,

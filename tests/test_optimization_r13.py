@@ -9,11 +9,7 @@ asof_join rewrite's identifier handling.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
 from flink_release_1_16_0_spark.operators.asof import asof_join  # noqa: E402

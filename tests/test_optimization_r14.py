@@ -11,11 +11,7 @@ broadcast when the threshold gate is closed).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
 from flink_release_1_16_0_spark.operators._sqlq import q_ident  # noqa: E402

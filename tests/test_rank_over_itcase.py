@@ -27,12 +27,8 @@ Adaptations, each deliberate:
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.fuzz_changelog import (  # noqa: E402
     FakeGroupState,
@@ -344,13 +340,15 @@ def _schedule(events):
     return batches, wm_seq
 
 
-def _over_fn(builder_name, **kw):
-    import flink_release_1_16_0_spark.streaming.stateful as S
+def _over_fn(**kw):
+    from flink_release_1_16_0_spark.streaming.stateful import (
+        streaming_over_event_time,
+    )
 
     cap = _Cap(
         _schema("c STRING, ts TIMESTAMP, id BIGINT, v DOUBLE")
     )
-    getattr(S, builder_name)(
+    streaming_over_event_time(
         cap, keys=["c"], value_col="v", id_col="id", ts_col="ts", **kw
     )
     return cap.fn
@@ -359,7 +357,7 @@ def _over_fn(builder_name, **kw):
 OVER_COLS = ["c", "ts", "id", "v"]
 
 
-def _run_over(builder_name, events, **kw):
+def _run_over(events, **kw):
     """events: ('L', (ts_ms, a, c)) | ('R', wm). Returns {(c, id):
     (n, sum)} plus id->(a, ts) so assertions can name rows by payload."""
     rows = []
@@ -375,13 +373,11 @@ def _run_over(builder_name, events, **kw):
         else:
             seq.append(("R", val))
     batches, wm_seq = _schedule(seq)
-    fn = _over_fn(builder_name, **kw)
+    fn = _over_fn(**kw)
     out = replay_wm(fn, batches, ["c"], OVER_COLS, wm_seq)
-    ncol = "win_n" if builder_name != "streaming_over_rows_event_time" else "running_n"
-    scol = "win_sum" if builder_name != "streaming_over_rows_event_time" else "running_sum"
     emitted = {}
     for r in out:
-        emitted[(r["c"], int(r["id"]))] = (int(r[ncol]), int(r[scol]))
+        emitted[(r["c"], int(r["id"]))] = (int(r["win_n"]), int(r["win_sum"]))
     return emitted, payload
 
 
@@ -433,9 +429,7 @@ def test_rowtime_bounded_partitioned_range_over():
         ("L", (20000, 20, "Hello World")),
         ("R", 19000),
     ]
-    emitted, payload = _run_over(
-        "streaming_over_range_event_time", E, bound_ms=1000
-    )
+    emitted, payload = _run_over(E, frame="range", preceding=1000)
     # (c, a, count, sum) — b-column identity dropped (two payload-equal
     # (2000, a=2) peers are indistinguishable without b; counts/sums
     # pin the frames)
@@ -492,9 +486,7 @@ def test_rowtime_bounded_partitioned_rows_over():
         ("L", (7, 7, "Hello World")),
         ("R", 20),
     ]
-    emitted, payload = _run_over(
-        "streaming_over_rows_bounded_event_time", E, n_rows=3
-    )
+    emitted, payload = _run_over(E, preceding=2)
     _expect(
         emitted,
         payload,
@@ -542,10 +534,7 @@ def test_rowtime_unbounded_partitioned_range_over():
     """OverAggregateITCase.testRowTimeUnBoundedPartitionedRangeOver
     (OverAggregateITCase.scala:739): RANGE UNBOUNDED PRECEDING — peers
     (equal ts) share the frame including all peers."""
-    emitted, payload = _run_over(
-        "streaming_over_range_event_time", UNBOUNDED_DATA,
-        bound_ms=10**12,
-    )
+    emitted, payload = _run_over(UNBOUNDED_DATA, frame="range")
     _expect(
         emitted,
         payload,
@@ -574,9 +563,7 @@ def test_rowtime_unbounded_nonpartitioned_range_over():
         (k, (v[0], v[1], "all") if k == "L" else v)
         for k, v in UNBOUNDED_DATA
     ]
-    emitted, payload = _run_over(
-        "streaming_over_range_event_time", events, bound_ms=10**12
-    )
+    emitted, payload = _run_over(events, frame="range")
     got = sorted(n_s for n_s in emitted.values())
     assert got == sorted(
         [
@@ -621,7 +608,7 @@ def test_rowtime_unbounded_partitioned_rows_over():
         ("L", (14000022, 9, "1")),
         ("R", 14000030),
     ]
-    emitted, payload = _run_over("streaming_over_rows_event_time", E)
+    emitted, payload = _run_over(E)
     _expect(
         emitted,
         payload,
@@ -642,3 +629,48 @@ def test_rowtime_unbounded_partitioned_rows_over():
             ("3", 5, 3, 8),
         ],
     )
+
+
+NULL_ROWS = [(1000, None), (2000, 3.0), (3000, None), (5000, None)]
+
+
+@pytest.mark.parametrize(
+    "frame, expected",
+    [
+        ({}, [(1, None), (2, 3.0), (3, 3.0), (4, 3.0)]),
+        ({"preceding": 1}, [(1, None), (2, 3.0), (2, 3.0), (2, None)]),
+        ({"frame": "range"}, [(1, None), (2, 3.0), (3, 3.0), (4, 3.0)]),
+        (
+            {"frame": "range", "preceding": 1000},
+            [(1, None), (2, 3.0), (2, 3.0), (1, None)],
+        ),
+        ("proc_time", [(1, None), (2, 3.0), (3, 3.0), (4, 3.0)]),
+    ],
+    ids=["rows_unbounded", "rows_1_preceding", "range_unbounded", "range_1s", "proc_time"],
+)
+def test_over_null_value_counts_but_does_not_sum(frame, expected):
+    """A NULL value counts in COUNT(*) but not in SUM; a frame with no
+    non-NULL value sums to NULL — every OVER frame kind, event time and
+    proc time."""
+    from tools.fuzz_changelog import replay
+
+    from flink_release_1_16_0_spark.streaming.stateful import (
+        streaming_over_rows_unbounded,
+    )
+
+    rows = [("a", pd.Timestamp(t, unit="ms"), i, v) for i, (t, v) in enumerate(NULL_ROWS)]
+    if frame == "proc_time":
+        cap = _Cap(_schema("c STRING, ts TIMESTAMP, id BIGINT, v DOUBLE"))
+        streaming_over_rows_unbounded(
+            cap, keys=["c"], order_cols=["ts", "id"], value_col="v", id_col="id"
+        )
+        out = replay(cap.fn, [rows], ["c"], OVER_COLS)
+        ncol, scol = "running_n", "running_sum"
+    else:
+        out = replay(_over_fn(**frame), [rows, []], ["c"], OVER_COLS, wm_seq=[0, 10**15])
+        ncol, scol = "win_n", "win_sum"
+    got = [
+        (int(r[ncol]), None if pd.isna(r[scol]) else r[scol])
+        for r in sorted(out, key=lambda r: r["id"])
+    ]
+    assert got == expected

@@ -4,12 +4,9 @@ partitioned file writes, side outputs (SURVEY.md sections 2.1, 2.9)."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.operators.sink import (  # noqa: E402
     enforce_constraints,

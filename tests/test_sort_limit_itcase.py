@@ -18,11 +18,7 @@ streaming/retract_agg.py for the inner MAX)."""
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import (  # noqa: E402
     LongType,

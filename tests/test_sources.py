@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark import sources as S  # noqa: E402
 

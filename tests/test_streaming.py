@@ -9,12 +9,8 @@ log. Multi-batch is forced by splitting the fixture into chunked files
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
 from flink_release_1_16_0_spark.streaming.core import run_to_table  # noqa: E402
@@ -453,6 +449,155 @@ def test_checkpoint_state_recovery_exactly_once(spark, tmp_path_factory):
     assert got[(2, "b")] == 1
 
 
+def _replay_with_restarts(spark, base, chunks, ddl, build, restart):
+    """Replay event-time-ordered ``chunks`` (one parquet file each)
+    through ``build`` with maxFilesPerTrigger=1 and a 1-minute
+    watermark. ``restart``: one availableNow run against ONE checkpoint
+    after each file is added, so the query stops and restarts from the
+    state store at every file boundary; otherwise one run after all
+    files exist. Returns every emitted row."""
+    data_dir, ckpt = str(base / "data"), str(base / "ckpt")
+    rows = []
+
+    def run():
+        stream = (
+            spark.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(data_dir)
+            .withWatermark("ts", "1 minute")
+        )
+        q = (
+            build(stream)
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, _bid: rows.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "drain timed out"
+        assert q.exception() is None, q.exception()
+
+    # two state partitions: the cost here is per task and per batch,
+    # and the checkpoint pins the count for every restart
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        for i, chunk in enumerate(chunks):
+            _write_chunk(spark, data_dir, chunk, ddl, 1000 * (i + 1))
+            if restart:
+                run()
+        if not restart:
+            run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return rows
+
+
+def _at(minute):
+    import datetime as dt
+
+    return dt.datetime(2024, 1, 1, 10, 0) + dt.timedelta(minutes=minute)
+
+
+def test_over_range_restart_equivalence(spark, tmp_path):
+    """The event-time OVER operator (RANGE 3 min PRECEDING) through the
+    real state store: stopping and restarting from the checkpoint at
+    every file boundary emits exactly what one uninterrupted run emits
+    (pending buffer, retained frame rows, carried totals and a NULL
+    value all round-trip through the state schema)."""
+    from flink_release_1_16_0_spark.streaming.stateful import (
+        streaming_over_event_time,
+    )
+
+    ddl = "k bigint, ts timestamp, id bigint, v double"
+    chunks = [
+        [(1, _at(0), 0, 1.0), (2, _at(1), 1, 2.0), (1, _at(2), 2, None), (1, _at(1), 3, 4.0)],
+        [(1, _at(5), 4, 1.5), (2, _at(4), 5, 2.5), (1, _at(6), 6, 3.0), (2, _at(7), 7, None)],
+        [(1, _at(9), 8, 2.0), (2, _at(10), 9, 1.0), (1, _at(8), 10, 5.0), (1, _at(9), 11, 0.5),
+         (1, _at(14), 12, 1.0), (2, _at(13), 13, 3.0), (2, _at(20), 14, 2.0)],
+    ]
+
+    def build(stream):
+        return streaming_over_event_time(
+            stream, keys=["k"], value_col="v", id_col="id",
+            frame="range", preceding=3 * 60 * 1000,
+        )
+
+    def emitted(restart):
+        rows = _replay_with_restarts(
+            spark, tmp_path / f"r{restart}", chunks, ddl, build, restart
+        )
+        return sorted((r["k"], r["id"], r["win_n"], r["win_sum"]) for r in rows)
+
+    once = emitted(False)
+    assert emitted(True) == once
+    # everything but the last watermark delay settles; ids 8 and 11 are
+    # peers at 10:09 and share one frame
+    assert {r[1] for r in once} == set(range(14))
+    assert [r[2:] for r in once if r[1] in (8, 11)] == [(4, 10.5), (4, 10.5)]
+
+
+def test_group_window_lateness_restart_equivalence(spark, tmp_path):
+    """The group-window operator with allowed lateness through the real
+    state store: restarting from the checkpoint at every file boundary
+    folds to the same per-window result as one uninterrupted run, with
+    fired windows held in state for the lateness horizon across the
+    restarts.
+
+    The input has no late rows: Spark drops rows at or before the
+    previous batch's watermark before they reach the operator, and a
+    restarted query's previous batch is the no-data batch that already
+    advanced the watermark — so a late-but-allowed row that one
+    uninterrupted run re-fires is dropped after a restart."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
+    )
+
+    ddl = "k bigint, ts timestamp, v double"
+    chunks = [
+        [(1, _at(0), 1.0), (1, _at(2), 2.0), (2, _at(3), 4.0)],
+        [(2, _at(12), 1.0), (1, _at(15), 5.0)],  # wm 10:14 fires [10:00, 10:10)
+        # wm 10:39 fires [10:10, 10:20) and retires [10:00, 10:10)
+        [(2, _at(16), 2.0), (1, _at(18), 0.5), (1, _at(40), 7.0)],
+    ]
+
+    def build(stream):
+        return streaming_group_window_agg(
+            stream,
+            keys=["k"],
+            ts_col="ts",
+            aggs=[
+                ("n", "count_star", None, LongType()),
+                ("total", "sum", "v", DoubleType()),
+            ],
+            size_ms=10 * 60 * 1000,
+            allowed_lateness_ms=10 * 60 * 1000,
+        )
+
+    def folded(restart):
+        rows = _replay_with_restarts(
+            spark, tmp_path / f"r{restart}", chunks, ddl, build, restart
+        )
+        table = {}
+        for r in rows:
+            key = (r["k"], r["window_start"].minute)
+            if r["__rowkind"] in ("+I", "+U"):
+                table[key] = (r["n"], r["total"])
+            elif r["__rowkind"] == "-D":
+                del table[key]
+        return table, sorted(r["__rowkind"] for r in rows)
+
+    once = folded(False)
+    assert folded(True) == once
+    # [10:40, 10:50) never fired
+    assert once == (
+        {(1, 0): (2, 3.0), (1, 10): (2, 5.5), (2, 0): (1, 4.0), (2, 10): (2, 3.0)},
+        ["+I"] * 4,
+    )
+
+
 def test_dedup_state_ttl_expires_idle_keys(spark, tmp_path):
     """table.exec.state.ttl semantics (ExecutionConfigOptions.java:52):
     state idle past the TTL is discarded, so a long-idle key's
@@ -588,7 +733,7 @@ def test_streaming_over_rows_bounded_multibatch(spark, sf_smoke, tmp_path_factor
     from pyspark.sql import Window
 
     from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_rows_bounded_event_time,
+        streaming_over_event_time,
     )
 
     path = str(tmp_path_factory.mktemp("rows_bounded_chunks"))
@@ -606,8 +751,8 @@ def test_streaming_over_rows_bounded_multibatch(spark, sf_smoke, tmp_path_factor
         .withWatermark("ts", "10 minutes")
     )
     out = run_to_table(
-        streaming_over_rows_bounded_event_time(
-            stream, keys=["user_id"], value_col="value", id_col="event_id", n_rows=5
+        streaming_over_event_time(
+            stream, keys=["user_id"], value_col="value", id_col="event_id", preceding=4
         ),
         "update",
     )
@@ -1014,8 +1159,10 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
     -U/+U pair; a row beyond the horizon is dropped; state retires."""
     import datetime as dt
 
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from pyspark.sql.types import DoubleType, LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     path = str(tmp_path_factory.mktemp("lateness"))
@@ -1043,13 +1190,17 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
         .withWatermark("ts", "1 minute")
     )
     out = run_to_table(
-        streaming_window_agg_allowed_lateness(
+        streaming_group_window_agg(
             stream,
             keys=["k"],
             ts_col="ts",
-            window_ms=10 * 60 * 1000,
+            aggs=[
+                ("n", "count_star", None, LongType()),
+                ("total", "sum", "v", DoubleType()),
+            ],
+            kind="tumble",
+            size_ms=10 * 60 * 1000,
             allowed_lateness_ms=10 * 60 * 1000,
-            value_col="v",
         ),
         "update",
     )
@@ -1073,13 +1224,15 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
 
 
 def test_hop_window_agg_allowed_lateness(spark, tmp_path_factory):
-    """Hop (sliding) windows through the lateness operator: a row lands
+    """Hop (sliding) windows with allowed lateness: a row lands
     in size/slide overlapping windows, and a late-but-allowed row
     re-fires EVERY fired window that contains it."""
     import datetime as dt
 
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from pyspark.sql.types import DoubleType, LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     path = str(tmp_path_factory.mktemp("hoplate"))
@@ -1106,14 +1259,18 @@ def test_hop_window_agg_allowed_lateness(spark, tmp_path_factory):
         .withWatermark("ts", "1 minute")
     )
     out = run_to_table(
-        streaming_window_agg_allowed_lateness(
+        streaming_group_window_agg(
             stream,
             keys=["k"],
             ts_col="ts",
-            window_ms=10 * 60 * 1000,
-            allowed_lateness_ms=10 * 60 * 1000,
-            value_col="v",
+            aggs=[
+                ("n", "count_star", None, LongType()),
+                ("total", "sum", "v", DoubleType()),
+            ],
+            kind="sliding",
+            size_ms=10 * 60 * 1000,
             slide_ms=5 * 60 * 1000,
+            allowed_lateness_ms=10 * 60 * 1000,
         ),
         "update",
     )

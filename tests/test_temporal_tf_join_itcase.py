@@ -24,11 +24,8 @@ operators/asof.py."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
 

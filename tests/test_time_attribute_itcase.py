@@ -17,11 +17,7 @@ test is original (table_env.py DDL parse + rewrite_group_windows)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
 

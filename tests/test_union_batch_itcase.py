@@ -9,11 +9,7 @@ Spark SQL (SURVEY.md section 2.7)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
 

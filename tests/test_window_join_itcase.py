@@ -33,12 +33,8 @@ the implementation is original.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import (  # noqa: E402
     LongType,

@@ -27,12 +27,9 @@ the implementation is original (streaming/window_tvf.py).
 
 from __future__ import annotations
 
-import sys
 from decimal import Decimal
 
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql.types import (  # noqa: E402
     LongType,

@@ -693,67 +693,17 @@ def _event_time_program(rng: random.Random, n_keys: int):
     return batches, wm_seq
 
 
-def check_over_rows(rng: random.Random) -> str | None:
-    """streaming_over_rows_event_time vs
-    RowTimeRowsUnboundedPrecedingFunction: rows buffer until the
-    watermark passes, finalize in (ts, id) order with the running
-    (count, exact-cents sum); late rows drop. Same per-batch
-    watermark/key-touch schedule on both sides."""
+def _over_emissions(rng: random.Random, **frame):
+    """Random event-time program through streaming_over_event_time:
+    (batches, wm_seq, Counter of emitted (k, id, ts_ms, n, cents))."""
     from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_rows_event_time,
+        streaming_over_event_time,
     )
 
     batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
-    streaming_over_rows_event_time(
-        cap, keys=["k"], value_col="v", id_col="id", ts_col="ts"
-    )
-    emissions = replay(
-        cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
-    )
-    got = Counter(
-        (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["running_n"], round(r["running_sum"] * 100))
-        for r in emissions
-    )
-    pending: dict = defaultdict(list)
-    acc: dict = defaultdict(lambda: [0, 0])  # n, cents
-    ref: Counter = Counter()
-    for b, wm in zip(batches, wm_seq):
-        touched = defaultdict(list)
-        for k, ts, i, v in b:
-            touched[k].append((ts.value // 1_000_000, i, v))
-        for k, evs in touched.items():
-            for m, i, v in evs:
-                if m >= wm:
-                    pending[k].append((m, i, v))
-            ready = sorted(p for p in pending[k] if p[0] <= wm)
-            pending[k] = [p for p in pending[k] if p[0] > wm]
-            for m, i, v in ready:
-                acc[k][0] += 1
-                acc[k][1] += int(round(v * 100))
-                ref[(k, i, m, acc[k][0], acc[k][1])] += 1
-    if got != ref:
-        return f"over_rows {dict(got)} != ref {dict(ref)}"
-    return None
-
-
-def check_over_range(rng: random.Random) -> str | None:
-    """streaming_over_range_event_time vs
-    RowTimeRangeBoundedPrecedingFunction, with the reference frame
-    computed from FULL history (no eviction) — so the operator's
-    state-retirement logic is checked against the semantic definition;
-    peers (equal ts) share one frame including all peers."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_over_range_event_time,
-    )
-
-    bound = 40
-    batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
-    cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
-    streaming_over_range_event_time(
-        cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
-        bound_ms=bound,
+    streaming_over_event_time(
+        cap, keys=["k"], value_col="v", id_col="id", ts_col="ts", **frame
     )
     emissions = replay(
         cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
@@ -763,9 +713,15 @@ def check_over_range(rng: random.Random) -> str | None:
          r["win_n"], round(r["win_sum"] * 100))
         for r in emissions
     )
+    return batches, wm_seq, got
+
+
+def _finalize(batches, wm_seq):
+    """The reference's watermark discipline, per touched key and batch:
+    yields (k, ready rows sorted by (ts, id), finalized history incl.
+    ready) — rows late on arrival (ts < wm) never appear."""
     pending: dict = defaultdict(list)
     finalized: dict = defaultdict(list)  # full history, never evicted
-    ref: Counter = Counter()
     for b, wm in zip(batches, wm_seq):
         touched = defaultdict(list)
         for k, ts, i, v in b:
@@ -777,20 +733,55 @@ def check_over_range(rng: random.Random) -> str | None:
             ready = sorted(p for p in pending[k] if p[0] <= wm)
             pending[k] = [p for p in pending[k] if p[0] > wm]
             finalized[k].extend(ready)
-            # frames from the FULL finalized history
-            done_ts = set()
-            for m, i, v in ready:
-                if m in done_ts:
-                    continue
-                done_ts.add(m)
-                frame = [
-                    f for f in finalized[k] if m - bound <= f[0] <= m
-                ]
-                n = len(frame)
-                cents = sum(int(round(f[2] * 100)) for f in frame)
-                for fm, fi, _fv in ready:
-                    if fm == m:
-                        ref[(k, fi, m, n, cents)] += 1
+            yield k, ready, finalized[k]
+
+
+def check_over_rows(rng: random.Random) -> str | None:
+    """streaming_over_event_time, ROWS frame (UNBOUNDED or a random
+    1..5 PRECEDING) vs RowTimeRows{Unbounded,Bounded}PrecedingFunction:
+    rows buffer until the watermark passes, finalize in (ts, id) order;
+    each row's frame is itself plus the previous ``preceding`` finalized
+    rows, taken from the FULL history (no eviction) — so the operator's
+    carried totals and state retirement are checked against the
+    definition. Late rows drop. Same per-batch watermark/key-touch
+    schedule on both sides."""
+    preceding = rng.choice([None, 1, 2, 3, 4, 5])
+    batches, wm_seq, got = _over_emissions(rng, preceding=preceding)
+    ref: Counter = Counter()
+    for k, ready, hist in _finalize(batches, wm_seq):
+        base = len(hist) - len(ready)
+        for j, (m, i, _v) in enumerate(ready):
+            end = base + j + 1
+            frame = hist[: end] if preceding is None else hist[max(0, end - preceding - 1): end]
+            cents = sum(int(round(f[2] * 100)) for f in frame)
+            ref[(k, i, m, len(frame), cents)] += 1
+    if got != ref:
+        return f"over_rows preceding={preceding} {dict(got)} != ref {dict(ref)}"
+    return None
+
+
+def check_over_range(rng: random.Random) -> str | None:
+    """streaming_over_event_time, RANGE 40 ms PRECEDING vs
+    RowTimeRangeBoundedPrecedingFunction, with the reference frame
+    computed from FULL history (no eviction) — so the operator's
+    state-retirement logic is checked against the semantic definition;
+    peers (equal ts) share one frame including all peers."""
+    bound = 40
+    batches, wm_seq, got = _over_emissions(rng, frame="range", preceding=bound)
+    ref: Counter = Counter()
+    for k, ready, hist in _finalize(batches, wm_seq):
+        # frames from the FULL finalized history
+        done_ts = set()
+        for m, i, v in ready:
+            if m in done_ts:
+                continue
+            done_ts.add(m)
+            frame = [f for f in hist if m - bound <= f[0] <= m]
+            n = len(frame)
+            cents = sum(int(round(f[2] * 100)) for f in frame)
+            for fm, fi, _fv in ready:
+                if fm == m:
+                    ref[(k, fi, m, n, cents)] += 1
     if got != ref:
         return f"over_range {dict(got)} != ref {dict(ref)}"
     return None
@@ -861,13 +852,16 @@ def check_normalize(rng: random.Random) -> str | None:
 
 
 def check_lateness(rng: random.Random) -> str | None:
-    """streaming_window_agg_allowed_lateness vs an independent fold:
-    rows on time or within the lateness horizon AT ARRIVAL count;
-    everything fires by the final flush; the folded (n, total) per
-    (key, window) must equal the kept-row ground truth, and -U/+U late
-    firings must fold cleanly."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    """streaming_group_window_agg with allowed lateness vs an
+    independent fold: rows on time or within the lateness horizon AT
+    ARRIVAL count (a window retires once wm >= end - 1 + lateness, the
+    reference's isWindowFired boundary); everything fires by the final
+    flush; the folded (n, total) per (key, window) must equal the
+    kept-row ground truth, and -U/+U late firings must fold cleanly."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     size, late = 100, 50
@@ -886,9 +880,11 @@ def check_lateness(rng: random.Random) -> str | None:
     batches.append([])  # final flush fires every remaining window
     wm_seq.append(10**15)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, v DOUBLE"))
-    streaming_window_agg_allowed_lateness(
-        cap, keys=["k"], ts_col="ts", window_ms=size,
-        allowed_lateness_ms=late, value_col="v",
+    streaming_group_window_agg(
+        cap, keys=["k"], ts_col="ts",
+        aggs=[("n", "count_star", None, LongType()),
+              ("total", "sum", "v", DoubleType())],
+        kind="tumble", size_ms=size, allowed_lateness_ms=late,
     )
     ts_batches = [
         [(k, pd.Timestamp(ts, unit="ms"), v) for k, ts, v in b]
@@ -911,7 +907,7 @@ def check_lateness(rng: random.Random) -> str | None:
     for b, wm in zip(batches, wm_seq):
         for k, ts, v in b:
             w = (ts // size) * size
-            if wm >= w + size + late:
+            if wm >= w + size - 1 + late:
                 continue  # beyond the lateness horizon at arrival
             n, cents = ref.get((k, w), (0, 0))
             ref[(k, w)] = (n + 1, cents + round(v * 100))
